@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.ops.avro_codec import to_avro_col
-from engine.ops.sinks import write_kinesis
+from engine.ops.avro_codec import encode_record, to_avro_col
+from engine.ops.sinks import kinesis_put_partitions, write_kinesis
 from engine.pipeline import (
     IncrementalRunner,
     PipelineConfig,
@@ -55,12 +56,12 @@ def make_avro_kinesis_sink(
     mode: str = "executor",
 ):
     """Sink callable for IncrementalRunner: project to the 11-field contract,
-    Avro-encode, put via :func:`engine.ops.sinks.write_kinesis`.  The default
-    ``mode='executor'`` ships each partition's ≤500-record chunks from the
-    executors (foreachPartition — the driver never holds the batch, same
-    collect-free default the raw sink carries); ``mode='driver'`` is the
-    explicit opt-in for in-memory test transports and strictly-ordered puts
-    (the reference's single-process order, lib/kinesis_client.py).
+    Avro-encode, put.  The default ``mode='executor'`` encodes and puts in
+    one executor-side pass (:func:`engine.ops.sinks.kinesis_put_partitions`:
+    each partition ships its own ≤500-record chunks, the driver sums one row
+    per put and never holds the batch); ``mode='driver'`` is the explicit
+    opt-in for in-memory test transports and strictly-ordered puts (the
+    reference's single-process order, lib/kinesis_client.py).
 
     ``schema_source`` enables the SURVEY §1.3 startup guard (reference:
     registry fetch at controller construction, lib/pipeline_controller.py:59):
@@ -84,8 +85,14 @@ def make_avro_kinesis_sink(
     cols = [f.name for f in SINK_RECORD.fields]
 
     def sink(df: DataFrame, batch_id: int) -> int:
+        live = not (dry_run or transport is None)
+        if live and mode != "driver":
+            return kinesis_put_partitions(
+                df.select(*cols), transport, batch_id=batch_id,
+                encode=partial(encode_record, schema=avro_schema),
+            )[0]
         enc = df.select(to_avro_col(df, cols, avro_schema).alias("record"))
-        if dry_run or transport is None:
+        if not live:
             # A bare count would let Catalyst prune the encode projection
             # away entirely — the dry run is exactly the run that must
             # SURFACE per-record encode failures before production
@@ -97,7 +104,7 @@ def make_avro_kinesis_sink(
                 F.sum(F.octet_length("record")).alias("__bytes"),
             ).collect()[0]
             return row["n"]
-        return write_kinesis(enc, transport, batch_id=batch_id, mode=mode)
+        return write_kinesis(enc, transport, batch_id=batch_id, mode="driver")
 
     return sink
 

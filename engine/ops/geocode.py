@@ -10,15 +10,19 @@ Reference behavior (lib/pipeline_controller.py:352-411):
 
 Spark-first shape:
 
-- each attempt is a ``mapInPandas`` stage: Arrow batch in → external call →
-  Arrow batch out.  The *transport* is injected (a callable), exactly like the
-  reference's mocked clients (tests/test_pipeline_controller.py:262-268), so
-  tests and the harness run a deterministic fake while production injects an
-  HTTP/FFI transport.  Arrow batch size (``maxRecordsPerBatch``) plays the
-  role of the reference's API batch limit; partition count bounds external
-  concurrency (the reference used 2 threads, nyc_geocoder_client.py:31).
-- the J9 "retry fills only nulls" overlay is ``coalesce(attempt1, attempt2,
-  attempt3)`` — no positional Series.update.
+- the whole cascade is one ``mapInArrow`` pass (:func:`with_geoid`): per
+  Arrow batch, :func:`cascade_batch` runs attempt 1, re-parses the misses,
+  runs attempt 2 on them and Geosupport on what is left, like the
+  reference's one sequential function per batch.  Each row meets each
+  external transport at most once by construction; nothing is persisted,
+  and the answer is attached to the row in place, with no join back.
+- the *transport* is injected (a callable), exactly like the reference's
+  mocked clients (tests/test_pipeline_controller.py:262-268), so tests and
+  the harness run a deterministic fake while production injects an HTTP/FFI
+  transport.  A census call is one Arrow batch of the rows still to answer
+  (columns :data:`CENSUS_COLS`, plus :data:`PARSED_COLS` on attempt 2).
+- the J9 "retry fills only nulls" overlay is first-non-null per row — no
+  positional Series.update.
 - retry/backoff/halving (ST7, census_geocoder_api_client.py:17-21,75-90)
   lives inside the transport wrapper: on failure it recursively halves the
   batch while ≥ ``min_split`` rows, then gives up to nulls.
@@ -27,19 +31,23 @@ Spark-first shape:
 from __future__ import annotations
 
 import hashlib
+import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from engine.ops.address import _QUOTE_RE, _parse_one, scrub_quotes
 
 __all__ = [
     "assemble_geoid",
     "borough_fips",
     "tract_coalesce",
-    "census_geocode",
-    "geosupport_geocode",
+    "cascade_batch",
+    "with_geoid",
     "geocode_cascade",
     "fake_census_transport",
     "fake_geosupport",
@@ -154,155 +162,138 @@ def fake_geosupport() -> GeosupportFn:
 
 
 # ---------------------------------------------------------------------------
-# mapInPandas stages
+# The cascade: one Python pass per Arrow batch
 # ---------------------------------------------------------------------------
 
+ADDR_COLS = ["address", "city", "region", "postal_code"]
+#: the attempt-1 census batch; attempt 2 sends these plus :data:`PARSED_COLS`
+CENSUS_COLS = ["patron_id", *ADDR_COLS, "full_address"]
+PARSED_COLS = ["house_number", "street_name", "unit"]
 
-def census_geocode(
-    df: DataFrame,
-    transport: CensusTransport,
-    *,
-    out_col: str = "geoid",
-) -> DataFrame:
-    """S5: batch-geocode via injected transport; adds ``out_col``.
+_QUOTES = re.compile(_QUOTE_RE)
 
-    ``mapInPandas`` feeds the transport one Arrow batch at a time; setting
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds the external batch
-    size exactly like the reference's 10k-row API batches.
+
+def _scrub(v: str | None) -> str | None:
+    """F3, the row form of :func:`engine.ops.address.scrub_quotes`."""
+    return None if v is None else _QUOTES.sub("", v)
+
+
+def _join(*parts: str | None) -> str:
+    """F4, the row form of ``trim(concat_ws(' ', ...))``: nulls are skipped
+    and only spaces are trimmed, as Spark's ``trim`` does."""
+    return " ".join(p for p in parts if p is not None).strip(" ")
+
+
+def _census(transport: CensusTransport, batch: pd.DataFrame) -> list:
+    """One census call; its answers align to the batch by index (missing or
+    NaN → None), the transport contract."""
+    got = transport(batch).reindex(batch.index)
+    return [None if pd.isna(g) else g for g in got]
+
+
+def cascade_batch(
+    rows: pd.DataFrame, census: CensusTransport, geosupport: GeosupportFn
+) -> list:
+    """The three attempts (lib/pipeline_controller.py:352-411) over one batch
+    of ``patron_id`` + raw address rows.  Returns one geoid or None per row:
+    the first attempt's non-null answer (J9).
+
+    1. census on the quote-scrubbed, space-joined ``full_address`` of every
+       row where that is non-empty;
+    2. the misses re-parsed (``_parse_one``) and re-assembled from house,
+       street, city, region and zip5, census again;
+    3. Geosupport, per row, on the attempt-2 misses that have a house
+       number, a street and a postal code (sent as its zip5).
+
+    Each row meets each transport at most once.  Each census call gets a
+    fresh ``RangeIndex``.
     """
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, StringType())])
-    cols = list(df.columns)
+    out: list = [None] * len(rows)
+    a = pd.DataFrame({"patron_id": list(rows["patron_id"])})
+    for c in ADDR_COLS:
+        a[c] = [_scrub(v) for v in rows[c]]
+    a["full_address"] = [_join(*r) for r in zip(*(a[c] for c in ADDR_COLS))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            res = b[cols].copy()
-            res[out_col] = transport(b).astype("object")
-            yield res
+    todo = [i for i, f in enumerate(a["full_address"]) if f]
+    if not todo:
+        return out
+    misses = []
+    for i, g in zip(todo, _census(census, a.iloc[todo].reset_index(drop=True))):
+        if g is None:
+            misses.append(i)
+        else:
+            out[i] = g
+    if not misses:
+        return out
 
-    return df.mapInPandas(run, schema=out_schema)
+    b = a.iloc[misses].reset_index(drop=True)
+    parsed = [_parse_one(f) for f in b["full_address"]]
+    for k, c in enumerate(PARSED_COLS):
+        b[c] = [p[k] for p in parsed]
+    zips = [None if z is None else z[:5] for z in b["postal_code"]]
+    b["full_address"] = [
+        _join(h or "", s or "", city, region, z)
+        for (h, s, _), city, region, z in zip(parsed, b["city"], b["region"], zips)
+    ]
+    for i, g, (h, s, _), z in zip(misses, _census(census, b), parsed, zips):
+        if g is None and h is not None and s is not None and z is not None:
+            g = geosupport(h, s, z)
+        out[i] = g
+    return out
 
 
-def geosupport_geocode(
+def with_geoid(
     df: DataFrame,
-    fn: GeosupportFn,
-    *,
-    house_col: str = "house_number",
-    street_col: str = "street_name",
-    zip_col: str = "postal_code",
-    out_col: str = "geoid_nyc",
-) -> DataFrame:
-    """S6: per-row native-library geocode.  The library handle is created
-    inside the task (one per worker, lazy) — the iterator form means init
-    happens once per partition, replacing the reference's 2-thread pool."""
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, StringType())])
-    cols = list(df.columns)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geocode = fn  # lazy per-task handle
-        for b in batches:
-            res = b[cols].copy()
-            res[out_col] = [
-                geocode(h, s, z)
-                for h, s, z in zip(b[house_col], b[street_col], b[zip_col])
-            ]
-            yield res
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-#: release ledger for the most recent cascade's attempt caches (see the
-#: persist comment inside geocode_cascade)
-_CASCADE_CACHE_LAST: list = []
-
-
-def geocode_cascade(
-    addresses: DataFrame,
     census: CensusTransport,
     geosupport: GeosupportFn,
     *,
-    parse_fn=None,
+    only: Column | None = None,
 ) -> DataFrame:
-    """The full 3-attempt cascade (lib/pipeline_controller.py:352-411) on a
-    frame with columns (patron_id, address, city, region, postal_code).
+    """Add ``geoid`` to every row of ``df`` (which holds ``patron_id`` and
+    the raw :data:`ADDR_COLS`) in one ``mapInArrow`` pass running
+    :func:`cascade_batch` per Arrow batch.
 
-    Returns the frame + ``geoid`` column (null where all attempts failed).
-    The overlay between attempts is ``coalesce`` (J9) — each attempt only ever
-    fills rows the previous attempts left null, computed only for those rows.
+    The other columns cross the pass as the Arrow arrays Spark sent, so no
+    type goes through pandas.  A row with a null ``patron_id``, or, given
+    ``only``, a row where ``only`` is not true, gets null and reaches no
+    transport: a geoid belongs to a patron, and a null key names none.
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds a census call
+    the way the reference's 10k-row API batches did; the partition count
+    bounds concurrent calls (the reference used 2 threads,
+    nyc_geocoder_client.py:31).
     """
-    from engine.ops.address import (
-        full_address,
-        scrub_quotes,
-        with_parsed_address,
-        zip5,
-    )
+    flag = "__geocode"
+    flagged = only is not None
+    src = df.withColumn(flag, only) if flagged else df
+    names = [*src.columns, "geoid"]
+    schema = StructType(src.schema.fields + [StructField("geoid", StringType())])
 
-    base = (
-        addresses.withColumns(
-            {c: scrub_quotes(c) for c in ("address", "city", "region", "postal_code")}
-        )
-        .withColumn("full_address", full_address("address", "city", "region", "postal_code"))
-        .filter(F.length("full_address") > 0)
-    )
-
-    # attempt 1: census on the raw assembled address.  Each attempt is
-    # persisted: downstream joins/filters branch from it, and recomputation
-    # would re-invoke the EXTERNAL transport (cost + rate limits) — the
-    # cache pin is part of the operator's at-most-once-per-attempt contract.
-    # A 1-deep release ledger bounds the session leak to one cascade's two
-    # frames (the advice-r8 discipline): each new cascade call releases the
-    # previous call's caches — unpersist is lineage-safe for an already-
-    # collected result, and an un-collected one recomputes (acceptable for
-    # the FAKE transports of the gate corpus; a production caller holding
-    # two live cascades should persist AND materialize its own copies
-    # before starting the next cascade).  NOT thread-safe: concurrent
-    # cascades in one session would release each other's in-flight
-    # attempt caches and re-invoke the external transport — serialize
-    # cascade calls or fork sessions (second review r9).
-    while _CASCADE_CACHE_LAST:
-        _CASCADE_CACHE_LAST.pop().unpersist()
-    a1 = census_geocode(base, census, out_col="geoid_a1").persist()
-    _CASCADE_CACHE_LAST.append(a1)
-
-    # attempt 2: re-parse malformed (still-null) rows, rebuild address, retry
-    misses1 = a1.filter(F.col("geoid_a1").isNull()).drop("geoid_a1")
-    parsed = (parse_fn or with_parsed_address)(misses1)
-    reparsed = parsed.withColumn(
-        "full_address",
-        F.trim(
-            F.concat_ws(
-                " ",
-                F.coalesce(F.col("house_number"), F.lit("")),
-                F.coalesce(F.col("street_name"), F.lit("")),
-                F.col("city"),
-                F.col("region"),
-                zip5("postal_code"),
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            vals = {c: rb.column(c).to_pylist() for c in ("patron_id", *ADDR_COLS)}
+            keep = [k is not None for k in vals["patron_id"]]
+            if flagged:
+                keep = [k and f is True for k, f in zip(keep, rb.column(flag).to_pylist())]
+            idx = [i for i, k in enumerate(keep) if k]
+            geoid: list = [None] * rb.num_rows
+            if idx:
+                rows = pd.DataFrame({c: [v[i] for i in idx] for c, v in vals.items()})
+                for i, g in zip(idx, cascade_batch(rows, census, geosupport)):
+                    geoid[i] = g
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, pa.array(geoid, pa.string())], names=names
             )
-        ),
-    )
-    a2 = census_geocode(reparsed, census, out_col="geoid_a2").persist()
-    _CASCADE_CACHE_LAST.append(a2)
 
-    # attempt 3: Geosupport for rows with house+street+zip
-    misses2 = a2.filter(F.col("geoid_a2").isNull())
-    eligible = misses2.filter(
-        F.col("house_number").isNotNull()
-        & F.col("street_name").isNotNull()
-        & F.col("postal_code").isNotNull()
-    )
-    a3 = geosupport_geocode(
-        eligible.withColumn("postal_code", zip5("postal_code")),
-        geosupport,
-        out_col="geoid_a3",
-    )
+    out = src.mapInArrow(run, schema)
+    return out.drop(flag) if flagged else out
 
-    # J9 overlay: later attempts fill only null slots of earlier ones
-    key = "patron_id"
-    merged = (
-        a1.join(
-            F.broadcast(a2.select(key, "geoid_a2")), on=key, how="left"
-        )
-        .join(F.broadcast(a3.select(key, "geoid_a3")), on=key, how="left")
-        .withColumn("geoid", F.coalesce("geoid_a1", "geoid_a2", "geoid_a3"))
-        .drop("geoid_a1", "geoid_a2", "geoid_a3")
-    )
-    return merged
+
+def geocode_cascade(
+    addresses: DataFrame, census: CensusTransport, geosupport: GeosupportFn
+) -> DataFrame:
+    """The full 3-attempt cascade on a frame with columns (patron_id, address,
+    city, region, postal_code): its addressable rows (non-empty scrubbed,
+    assembled address) with a ``geoid`` column, null where every attempt
+    failed."""
+    assembled = F.trim(F.concat_ws(" ", *[scrub_quotes(c) for c in ADDR_COLS]))
+    return with_geoid(addresses.filter(F.length(assembled) > 0), census, geosupport)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from engine.ops import relational as R
 from engine.ops.dedup import accumulate_keys, keep_first
-from engine.ops.geocode import geocode_cascade
+from engine.ops.geocode import ADDR_COLS, with_geoid
 from engine.ops.hashing import address_key, normalize_id, obfuscate_col
 from engine.ops.address import zip5
 from engine.schemas import SINK_RECORD
@@ -52,8 +52,6 @@ MODE_STATE_KEY = {
     PipelineMode.UPDATED_PATRONS: "update_dt",
     PipelineMode.DELETED_PATRONS: "deletion_date",
 }
-
-ADDR_COLS = ["address", "city", "region", "postal_code"]
 
 #: J4 tiebreak key (helpers/query_helper.py:30): the source pre-sorts by
 #: (ts, display_order, patron_record_address_type_id); engine keeps the
@@ -147,9 +145,7 @@ def new_patrons_graph(
     )
     # NEW mode: nothing cached — geocode every address (reference :203-208)
     if census is not None:
-        addr = d.select("patron_id", *ADDR_COLS)
-        geocoded = geocode_cascade(addr, census, geosupport).select("patron_id", "geoid")
-        d = R.left_join_broadcast(d, geocoded, on="patron_id")
+        d = with_geoid(d, census, geosupport)
     else:
         d = d.withColumn("geoid", F.lit(None).cast("string"))
     d = (
@@ -207,16 +203,8 @@ def updated_patrons_graph(
         ),
     )
     if census is not None:
-        misses = d.filter(F.col("cached_patron_id").isNull()).select(
-            "patron_id", *ADDR_COLS
-        )
-        geocoded = geocode_cascade(misses, census, geosupport).select(
-            "patron_id", F.col("geoid").alias("computed_geoid")
-        )
-        d = R.left_join_broadcast(d, geocoded, on="patron_id")
-        d = d.withColumn("geoid", F.coalesce("cached_geoid", "computed_geoid")).drop(
-            "computed_geoid"
-        )
+        d = with_geoid(d, census, geosupport, only=F.col("cached_patron_id").isNull())
+        d = d.withColumn("geoid", F.coalesce("cached_geoid", "geoid"))
     else:
         d = d.withColumn("geoid", F.col("cached_geoid"))
 
@@ -332,11 +320,15 @@ class IncrementalRunner:
             )
             batch = R.keyset_page(scan, [order_col], limit)
             batch = batch.localCheckpoint(eager=True)  # pin: one scan per batch
-            n = batch.count()
+            page = batch.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min(order_col).alias("mn"),
+                F.max(order_col).alias("mx"),
+            ).collect()[0]
+            n, mn, mx = page["n"], page["mn"], page["mx"]
             if n == 0:
                 break
             # ST5 stall guard: full batch, watermark cannot advance
-            mn, mx = R.min_max(batch, order_col)
             if n == limit and mn == mx:
                 raise PipelineStallError(
                     f"{mode}: batch of {n} rows all at {mn!r}; raise batch_size"

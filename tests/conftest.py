@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
+import pandas as pd
 import pytest
 
 from engine.session import get_spark
@@ -62,3 +65,50 @@ def sierra_df(spark, sierra_rows):
         "patron_record_address_type_id int"
     )
     return spark.createDataFrame(sierra_rows, schema=schema)
+
+
+@pytest.fixture()
+def geocode_log(tmp_path):
+    """File-backed recorders around geocode transports.  Every call appends
+    one JSON line (kind, batch columns, input rows, answers) from whichever
+    process makes it; ``read()`` returns them all.  The recorders are
+    nested functions, so cloudpickle ships them by value to the Python
+    workers (a name in this module would not import there)."""
+    from types import SimpleNamespace
+
+    log_dir = str(tmp_path / "geocode-log")
+    os.makedirs(log_dir)
+
+    def write(rec):
+        with open(os.path.join(log_dir, f"{os.getpid()}.jsonl"), "a") as f:
+            f.write(json.dumps(rec) + "\n")
+
+    def census(inner):
+        def recorded(batch):
+            got = inner(batch)
+            write({
+                "kind": "census2" if "house_number" in batch.columns else "census1",
+                "columns": list(batch.columns),
+                "rows": batch.to_dict("records"),
+                "answers": [None if pd.isna(g) else g for g in got.reindex(batch.index)],
+            })
+            return got
+
+        return recorded
+
+    def geosupport(inner):
+        def recorded(house, street, zip_code):
+            got = inner(house, street, zip_code)
+            write({"kind": "geosupport", "args": [house, street, zip_code], "answer": got})
+            return got
+
+        return recorded
+
+    def read():
+        out = []
+        for name in sorted(os.listdir(log_dir)):
+            with open(os.path.join(log_dir, name)) as f:
+                out += [json.loads(line) for line in f if line.strip()]
+        return out
+
+    return SimpleNamespace(census=census, geosupport=geosupport, read=read)

@@ -15,11 +15,11 @@ from engine.ops.address import (
     zip5,
 )
 from engine.ops.geocode import (
-    census_geocode,
+    _join,
+    _scrub,
     fake_census_transport,
     fake_geosupport,
     geocode_cascade,
-    geosupport_geocode,
     retrying_census_transport,
 )
 
@@ -100,26 +100,29 @@ def _addr_df(spark):
     )
 
 
-def test_census_geocode_stage(spark):
-    df = _addr_df(spark).withColumn(
-        "full_address", full_address("address", "city", "region", "postal_code")
-    ).filter(F.length("full_address") > 0)
-    out = census_geocode(df, fake_census_transport())
-    rows = out.collect()
-    assert len(rows) == 2
-    for r in rows:
-        assert r["geoid"] is None or len(r["geoid"]) == 11
-
-
-def test_geosupport_stage(spark):
-    df = spark.createDataFrame(
-        [("1", "123", "Main St", "10001"), ("2", None, "X", "10001")],
-        "patron_id string, house_number string, street_name string, postal_code string",
-    )
-    out = geosupport_geocode(df, fake_geosupport())
-    got = {r["patron_id"]: r["geoid_nyc"] for r in out.collect()}
-    assert got["1"] is not None and len(got["1"]) == 11
-    assert got["2"] is None  # missing house number → per-row null
+def test_cascade_row_forms_match_sql_helpers(spark):
+    """The cascade scrubs and assembles addresses in Python; those row forms
+    must equal the SQL helpers that define F3-F5 (scrub_quotes,
+    full_address, zip5) on quotes, backslashes, tabs, edge spaces and nulls
+    (Spark's trim strips spaces only)."""
+    rows = [
+        ("12 \"O'Hara\" Rd", " Bronx ", "N\\Y", "10461-2233"),
+        ("\t1 Elm\t", None, "NY", None),
+        ("  ", None, None, "  "),
+        (None, None, None, None),
+        ("'\"", "", "", "1"),
+    ]
+    cols = ["address", "city", "region", "postal_code"]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+    scrubbed = df.select(*[scrub_quotes(c).alias(c) for c in cols])
+    got = scrubbed.select(
+        *cols, full_address(*cols).alias("fa"), zip5("postal_code").alias("z")
+    ).collect()
+    for raw, r in zip(rows, got):
+        py = [_scrub(v) for v in raw]
+        assert py == [r[c] for c in cols]
+        assert _join(*py) == r["fa"]
+        assert (None if py[3] is None else py[3][:5]) == r["z"]
 
 
 def test_cascade_fills_with_fallbacks(spark):

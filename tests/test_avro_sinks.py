@@ -183,16 +183,15 @@ def test_sink_construction_fails_fast_on_drifted_registry(spark):
 
 
 def test_write_kinesis_default_mode_never_collects(spark, tmp_path, monkeypatch):
-    """VERDICT r6 #3: the DEFAULT path must be the executor-side
-    foreachPartition put — nobody should ship the driver collect to a real
-    cluster by habit.  Pinned by poisoning DataFrame.collect for the call:
-    the default mode must deliver every record without touching it;
-    mode='driver' remains an explicit ordered-put opt-in."""
+    """VERDICT r6 #3: the DEFAULT path must be the executor-side put —
+    nobody should ship the driver collect to a real cluster by habit.
+    Pinned by poisoning ``collect`` on the frame's concrete class (Spark's
+    classic DataFrame overrides the base method) for the call: the default
+    mode must deliver every record without touching it; mode='driver'
+    remains an explicit ordered-put opt-in."""
     import glob
     import os
     import uuid
-
-    from pyspark.sql import DataFrame
 
     out_dir = str(tmp_path / "dputs")
     os.makedirs(out_dir, exist_ok=True)
@@ -208,7 +207,7 @@ def test_write_kinesis_default_mode_never_collects(spark, tmp_path, monkeypatch)
     df = spark.createDataFrame(
         [(f"r{i}".encode(),) for i in range(700)], "record binary"
     ).repartition(2)
-    monkeypatch.setattr(DataFrame, "collect", poisoned_collect)
+    monkeypatch.setattr(type(df), "collect", poisoned_collect)
     n = write_kinesis(df, transport, batch_id=3)  # no mode: the default
     assert n == 700
     total = 0
@@ -222,13 +221,12 @@ def test_avro_sink_factory_default_never_collects(spark, tmp_path, monkeypatch):
     """VERDICT r7 #8: the app-level sink factory must carry the same
     collect-free default as the raw sink — its old body collected every
     encoded record on the driver unconditionally.  Pinned the same way:
-    poison DataFrame.collect, run the factory-default sink end to end
-    (encode + executor put), and require every record delivered."""
+    poison ``collect`` on the frame's concrete class, run the
+    factory-default sink end to end (encode + executor put), and require
+    every record delivered."""
     import glob
     import os
     import uuid
-
-    from pyspark.sql import DataFrame
 
     from engine.app import make_avro_kinesis_sink
 
@@ -250,7 +248,7 @@ def test_avro_sink_factory_default_never_collects(spark, tmp_path, monkeypatch):
         rows.append(row)
     df = spark.createDataFrame(rows, SINK_RECORD).repartition(2)
     monkeypatch.setattr(
-        DataFrame,
+        type(df),
         "collect",
         lambda self: (_ for _ in ()).throw(
             AssertionError("factory-default sink called df.collect()")
@@ -311,3 +309,64 @@ def test_collecting_transport_refuses_executor_mode(spark):
     # driver mode remains the sanctioned path
     assert write_kinesis(df, transport, mode="driver") == 2
     assert len(transport.records) == 2
+
+
+def test_boto3_transport_retries_failed_records_then_raises(monkeypatch):
+    """Records a PutRecords response marks failed are put again after a
+    doubling backoff; records still failed after the last attempt raise,
+    so the sink fails instead of reporting them delivered."""
+    import sys
+    import types
+
+    import pytest
+
+    from engine.ops import sinks
+
+    calls, sleeps = [], []
+    fail = {b"b": 2, b"d": 2}
+
+    class Client:
+        def put_records(self, StreamName, Records):
+            calls.append([e["Data"] for e in Records])
+            out = []
+            for e in Records:
+                if fail.get(e["Data"], 0):
+                    fail[e["Data"]] -= 1
+                    out.append({"ErrorCode": "ProvisionedThroughputExceededException"})
+                else:
+                    out.append({"SequenceNumber": "1", "ShardId": "shardId-0"})
+            return {"FailedRecordCount": sum("ErrorCode" in r for r in out), "Records": out}
+
+    fake = types.ModuleType("boto3")
+    fake.client = lambda service: Client()
+    monkeypatch.setitem(sys.modules, "boto3", fake)
+    monkeypatch.setattr(sinks, "time", types.SimpleNamespace(sleep=sleeps.append))
+
+    put = sinks.boto3_kinesis_transport("patrons")
+    put([b"a", b"b", b"c", b"d"], 0)
+    assert calls == [[b"a", b"b", b"c", b"d"], [b"b", b"d"], [b"b", b"d"]]
+    assert sleeps == [sinks.PUT_BACKOFF_S, 2 * sinks.PUT_BACKOFF_S]
+
+    calls.clear()
+    fail[b"x"] = sinks.PUT_ATTEMPTS
+    with pytest.raises(sinks.KinesisPutError, match="1 of 2 records"):
+        put([b"x", b"y"], 1)
+    assert calls == [[b"x", b"y"]] + [[b"x"]] * (sinks.PUT_ATTEMPTS - 1)
+
+
+def test_executor_put_runs_as_a_sql_execution(spark):
+    """The default put is a SQL execution: its Python pass shows in the SQL
+    status store as a MapInArrow node with Python-worker metrics."""
+    from engine.app import make_avro_kinesis_sink
+
+    def transport(records, batch_id):
+        pass
+
+    row = {f.name: None for f in SINK_RECORD.fields}
+    row.update(patron_id="p1", ptype_code=3)
+    assert make_avro_kinesis_sink(transport)(spark.createDataFrame([row], SINK_RECORD), 0) == 1
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    eid = execs.apply(execs.size() - 1).executionId()
+    dot = store.planGraph(eid).makeDotFile(store.executionMetrics(eid))
+    assert "MapInArrow" in dot and "time to run Python workers" in dot

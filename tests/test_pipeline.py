@@ -139,15 +139,9 @@ def test_incremental_runner_stall_guard(spark, tmp_path):
         )
 
 
-def test_updated_patrons_geocodes_only_misses(spark, sierra_df):
+def test_updated_patrons_geocodes_only_misses(spark, sierra_df, geocode_log):
     """Cache hit rows keep the cached geoid untouched; only misses flow
     through the cascade (reference lib/pipeline_controller.py:212-215)."""
-    calls = []
-
-    def counting_census(batch):
-        calls.append(len(batch))
-        return fake_census_transport()(batch)
-
     cfg = PipelineConfig(salt="test-salt")
     # cache covers ONLY patron 123's address
     full_cache = new_patrons_graph(sierra_df, cfg).withColumn(
@@ -155,9 +149,74 @@ def test_updated_patrons_geocodes_only_misses(spark, sierra_df):
     )
     cache = full_cache.filter(F.col("postal_code") == "10001")
     out = updated_patrons_graph(
-        sierra_df, cache, cfg, census=counting_census, geosupport=fake_geosupport()
+        sierra_df, cache, cfg, census=geocode_log.census(fake_census_transport()),
+        geosupport=fake_geosupport(),
     ).collect()
     by_zip = {r["postal_code"]: r for r in out}
     assert by_zip["10001"]["geoid"] == "11111111111"  # cache hit reused
-    # misses (456, 789) went to the cascade; 123 did not
-    assert sum(calls) <= 4  # attempts only over miss rows, never the hit
+    # only the addressable miss (456) reached the cascade; 123 (hit) and
+    # 789 (no address) did not
+    keys = [r["patron_id"] for c in geocode_log.read() if c["kind"] == "census1" for r in c["rows"]]
+    assert keys == [by_zip["11201"]["patron_id"]]
+
+
+def test_new_patrons_graph_cascade_edge_rows(spark, geocode_log):
+    """Edge rows through the in-graph cascade, pinning the transport batch
+    shape (attempt 1: patron_id + scrubbed address parts + full_address;
+    attempt 2 adds the re-parsed parts).  Quotes are scrubbed before any
+    call; an empty address and a null patron_id reach no transport (the
+    null-id row keeps a null geoid); an unparseable address has no house
+    number, so it never reaches Geosupport."""
+    from engine.ops.geocode import CENSUS_COLS, PARSED_COLS
+    from engine.ops.hashing import obfuscate_col
+
+    def never_match(batch):
+        import pandas as pd
+
+        return pd.Series([None] * len(batch), index=batch.index, dtype="object")
+
+    ts = dt.datetime(2021, 1, 1, 5)
+    rows = [
+        ("1", "12 \"O'Hara\" Rd", "Bronx", "NY", "10461-2233"),
+        ("2", "", None, None, None),
+        ("3", "c/o Desk, Rear", "Queens", "NY", "11375"),
+        (None, "5 Oak St", "Queens", "NY", "11375"),
+    ]
+    batch = spark.createDataFrame(
+        [(p, a, c, r, z, ts, ts) for p, a, c, r, z in rows],
+        "patron_id_plaintext string, address string, city string, region string, "
+        "postal_code string, creation_timestamp timestamp, last_updated_timestamp timestamp",
+    )
+    out = new_patrons_graph(
+        batch, CFG, census=geocode_log.census(never_match),
+        geosupport=geocode_log.geosupport(fake_geosupport()),
+    ).collect()
+    hashed = {
+        r["p"]: r["h"]
+        for r in spark.createDataFrame([("1",), ("2",), ("3",)], "p string")
+        .select("p", obfuscate_col("p", CFG.salt).alias("h"))
+        .collect()
+    }
+    log = geocode_log.read()
+    c1 = [c for c in log if c["kind"] == "census1"]
+    c2 = [c for c in log if c["kind"] == "census2"]
+    assert {tuple(c["columns"]) for c in c1} == {tuple(CENSUS_COLS)}
+    assert {tuple(c["columns"]) for c in c2} == {tuple(CENSUS_COLS + PARSED_COLS)}
+    a1 = {r["patron_id"]: r for c in c1 for r in c["rows"]}
+    a2 = {r["patron_id"]: r for c in c2 for r in c["rows"]}
+    assert set(a1) == set(a2) == {hashed["1"], hashed["3"]}
+    assert a1[hashed["1"]]["address"] == "12 OHara Rd"
+    assert a1[hashed["1"]]["full_address"] == "12 OHara Rd Bronx NY 10461-2233"
+    assert a2[hashed["1"]]["full_address"] == "12 OHara Rd Bronx NY 10461-2233 Bronx NY 10461"
+    assert a2[hashed["3"]]["house_number"] is None
+    args = ("12", "OHara Rd Bronx NY 10461-2233", "10461")
+    assert [c["args"] for c in log if c["kind"] == "geosupport"] == [list(args)]
+
+    geoid = {r["patron_id"]: r["geoid"] for r in out}
+    assert len(out) == 4
+    assert geoid == {
+        hashed["1"]: fake_geosupport()(*args),
+        hashed["2"]: None,
+        hashed["3"]: None,
+        None: None,
+    }

@@ -245,7 +245,7 @@ def test_soak_matview_bucketed_one_exchange_sf01(spark, tmp_path):
 def test_soak_avro_kinesis_sink_sf01(spark, tmp_path):
     """VERDICT r8 #4: the Avro/Kinesis sink soaked at sf0.1 — a real
     availableNow drain through make_avro_kinesis_sink with the transport
-    running EXECUTOR-side (foreachPartition, the scale default).  Pins:
+    running EXECUTOR-side (the put pass, the scale default).  Pins:
     every put batch ≤500 records (reference config/production.yaml:12),
     total put records == the batch-twin row count, and a batchId replay
     (at-least-once redelivery) yields byte-identical puts with no
