@@ -99,7 +99,12 @@ def exact_dedup(df: DataFrame, on_cols: list[str], keep_by: list[str] | None = N
 
 def accumulate_keys(seen: DataFrame | None, new_keys: DataFrame) -> DataFrame:
     """ST4/A4: fold a batch's keys into the session key set
-    (``processed_ids.update``, lib/pipeline_controller.py:174,284)."""
+    (``processed_ids.update``, lib/pipeline_controller.py:174,284).
+
+    The result is lazy: a caller folding batch after batch checkpoints each
+    result, as :class:`engine.pipeline.IncrementalRunner` does, so the key
+    set stays one checkpoint instead of a union chain that grows with every
+    batch."""
     if seen is None:
         return new_keys.distinct()
     return seen.unionByName(new_keys).distinct()

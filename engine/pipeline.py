@@ -280,6 +280,12 @@ class IncrementalRunner:
     the stored watermark (inclusive ``>=``), and the session key set (ST4)
     makes the re-emissions no-ops — at-least-once upstream, idempotent
     downstream.
+
+    The session key set ``seen`` is one checkpointed frame: each batch folds
+    its keys into it with :func:`engine.ops.dedup.accumulate_keys` and
+    checkpoints the result, so its plan is one scan whatever the number of
+    batches, and no lineage of earlier batches is replayed.  The fold itself
+    still reads every key seen so far (O(keys seen) per batch).
     """
 
     def __init__(
@@ -338,11 +344,14 @@ class IncrementalRunner:
                 emitted = self.sink(out, stats.batches)
             else:
                 emitted = out.count()
-            # ST4: fold this batch's keys into session state
-            keys = batch.select("patron_id_plaintext").distinct().localCheckpoint(
-                eager=True
-            )
-            self.seen = accumulate_keys(self.seen, keys)
+            # the output's plan holds the previous key set: drop it, so once
+            # the fold replaces that set only one key-set checkpoint is live
+            del out
+            # ST4: fold this batch's keys into the session key set, held as
+            # one checkpoint: the next anti-join broadcasts a single scan
+            self.seen = accumulate_keys(
+                self.seen, batch.select("patron_id_plaintext")
+            ).localCheckpoint(eager=True)
             # ST2: advance watermark to the pre-dedup batch max
             stats.last_watermark = mx
             state[state_key] = str(mx)

@@ -13,8 +13,19 @@ settings.  Key decisions (SURVEY §4, §7):
 - **AQE on.**  Runtime coalescing of shuffle partitions + skew-join splitting
   replace hand-tuned partition counts when the same plan runs at 1000×
   the local test data size.
-- **Arrow on.**  Every Python seam (hashing, address parse, geocode cascade)
-  is a Pandas UDF / mapInPandas over Arrow batches — never row-at-a-time.
+- **Arrow on.**  Every Python seam runs over Arrow batches, never
+  row-at-a-time: the geocode cascade and the Kinesis put are ``mapInArrow``
+  passes, hashing and address parsing are pandas UDFs.
+- **Python worker set-up.**  pyspark calls ``importlib.invalidate_caches()``
+  in every Python task's set-up, and on Python 3.11 that re-reads the
+  directory of ``pyspark.zip``, the py4j zip and the spark-core jar behind
+  each of their zip importers: 0.15-0.25 s of CPU per task, more than a
+  500-row micro-batch's own Python work.  Those archives do not change while
+  the application runs, so the first import of ``engine`` inside a worker
+  makes their importers keep their listings (``engine/__init__.py``).  It
+  is not a session setting: the fix must act in whatever worker runs engine
+  code, needs no module importable before ``--py-files`` arrive, and does
+  nothing in the driver.
 """
 
 from __future__ import annotations

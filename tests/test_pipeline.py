@@ -139,6 +139,47 @@ def test_incremental_runner_stall_guard(spark, tmp_path):
         )
 
 
+def test_incremental_runner_key_set_stays_one_checkpoint(spark, tmp_path):
+    """Over 100+ batches the session key set stays one checkpointed scan:
+    its optimized plan has the same size from batch 2 on, and the graph's
+    anti-join broadcasts exactly that one scan with no shuffle, instead of
+    replaying a union chain that grows with every batch."""
+    from engine.ops import relational as R
+
+    n_rows = 101
+    rows = [(i, dt.datetime(2021, 1, 1) + dt.timedelta(minutes=i)) for i in range(n_rows)]
+    df = spark.createDataFrame(
+        rows, "patron_id_plaintext long, creation_timestamp timestamp"
+    )
+    store = LocalJsonStateStore(str(tmp_path / "state.json"))
+    runner = IncrementalRunner(spark, PipelineConfig(salt="t", batch_size=2), store)
+    key_set_nodes, build_plans = [], []
+
+    def pass_through(batch, seen):
+        if seen is None:
+            return batch
+        key_set_nodes.append(
+            len(seen._jdf.queryExecution().optimizedPlan().toString().splitlines())
+        )
+        out = R.anti_join(batch, seen, on="patron_id_plaintext")
+        build_plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    stats = runner.run_mode(
+        df, PipelineMode.NEW_PATRONS, pass_through, now=dt.datetime(2021, 6, 1)
+    )
+    # inclusive >= restart: each 2-row batch re-reads the previous boundary
+    # row, which the key set drops, so every patron is emitted once
+    assert stats.batches == n_rows
+    assert stats.rows_out == n_rows
+    assert len(key_set_nodes) >= 100
+    assert set(key_set_nodes) == {key_set_nodes[0]}
+    for plan in build_plans:
+        # one scan of the page checkpoint, one of the key-set checkpoint
+        assert plan.count("Scan ExistingRDD") == 2, plan
+        assert "Exchange hashpartitioning" not in plan, plan
+
+
 def test_updated_patrons_geocodes_only_misses(spark, sierra_df, geocode_log):
     """Cache hit rows keep the cached geoid untouched; only misses flow
     through the cascade (reference lib/pipeline_controller.py:212-215)."""

@@ -898,3 +898,14 @@ def test_r11_opt_graph_statics_ride_the_ledger(spark):
     label_propagation(edges, iters=2, materialize=False).collect()
     assert len(_INTERNAL_SIGS_LAST) == 1  # und
     ledger_clear()
+
+
+def test_final_plan_is_the_plan_the_run_finished_with(spark):
+    """``final_plan`` reads the AQE-final plan of the execution it ran, not
+    the never-executed plan of the frame's own QueryExecution."""
+    from tools.final_plan import final_plan
+
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    plan = final_plan(df)
+    assert "isFinalPlan=true" in plan
+    assert "ShuffleQueryStage" in plan

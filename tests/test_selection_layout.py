@@ -167,6 +167,21 @@ def test_mmr_rejects_non_integer_lambda_and_skips_null_quality(spark):
     assert [x["id"] for x in picks] == [1]  # NULL quality excluded, no crash
 
 
+def test_mmr_skips_rows_whose_norm_overflows(spark):
+    """Finite components whose norm overflows to infinity: the row is
+    excluded up front instead of reaching the pick fold as ``infD``."""
+    p = spark.createDataFrame(
+        [
+            (1, [1e200, 1e200], 0.9),
+            (2, [1.0, 0.0], 0.5),
+            (3, [0.0, 1.0], 0.4),
+        ],
+        "vec_id long, embedding array<double>, quality double",
+    )
+    picks = mmr_select(p, k=3, batch=1)
+    assert [x["id"] for x in picks] == [2, 3]
+
+
 def test_mmr_batched_path_matches_per_item_loop(spark):
     """VERDICT r6 #4: the batched greedy path (one collect of batch+1
     candidates, driver-side selection under the sentinel bound) must
