@@ -21,10 +21,9 @@ from dataclasses import dataclass
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from engine.ops.avro_codec import encode_record, to_avro_col
-from engine.ops.sinks import kinesis_put_partitions, write_kinesis
+from engine.ops.avro_codec import encode_record
+from engine.ops.sinks import discard_transport, kinesis_put_partitions
 from engine.pipeline import (
     IncrementalRunner,
     PipelineConfig,
@@ -53,15 +52,15 @@ def make_avro_kinesis_sink(
     dry_run: bool = False,
     schema_source: str | dict | None = None,
     schema_transport=None,
-    mode: str = "executor",
 ):
     """Sink callable for IncrementalRunner: project to the 11-field contract,
-    Avro-encode, put.  The default ``mode='executor'`` encodes and puts in
-    one executor-side pass (:func:`engine.ops.sinks.kinesis_put_partitions`:
-    each partition ships its own ≤500-record chunks, the driver sums one row
-    per put and never holds the batch); ``mode='driver'`` is the explicit
-    opt-in for in-memory test transports and strictly-ordered puts (the
-    reference's single-process order, lib/kinesis_client.py).
+    then Avro-encode and put in one executor-side pass
+    (:func:`engine.ops.sinks.kinesis_put_partitions`: each partition ships
+    its own ≤500-record chunks, the driver sums one row per put and never
+    holds the batch).  ``dry_run`` or ``transport=None`` runs the same pass
+    with :func:`engine.ops.sinks.discard_transport` — every row goes through
+    the production encoder and nothing is sent (the reference's
+    ``IGNORE_KINESIS``, lib/pipeline_controller.py:72).
 
     ``schema_source`` enables the SURVEY §1.3 startup guard (reference:
     registry fetch at controller construction, lib/pipeline_controller.py:59):
@@ -83,28 +82,14 @@ def make_avro_kinesis_sink(
         )
         check_schema_compat(avro_schema, SINK_RECORD)
     cols = [f.name for f in SINK_RECORD.fields]
+    if dry_run or transport is None:
+        transport = discard_transport
 
     def sink(df: DataFrame, batch_id: int) -> int:
-        live = not (dry_run or transport is None)
-        if live and mode != "driver":
-            return kinesis_put_partitions(
-                df.select(*cols), transport, batch_id=batch_id,
-                encode=partial(encode_record, schema=avro_schema),
-            )[0]
-        enc = df.select(to_avro_col(df, cols, avro_schema).alias("record"))
-        if not live:
-            # A bare count would let Catalyst prune the encode projection
-            # away entirely — the dry run is exactly the run that must
-            # SURFACE per-record encode failures before production
-            # (reference IGNORE_KINESIS still encodes).  Aggregating over
-            # the record bytes forces every row through the encoder
-            # (review catch r8).
-            row = enc.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.octet_length("record")).alias("__bytes"),
-            ).collect()[0]
-            return row["n"]
-        return write_kinesis(enc, transport, batch_id=batch_id, mode="driver")
+        return kinesis_put_partitions(
+            df.select(*cols), transport, batch_id=batch_id,
+            encode=partial(encode_record, schema=avro_schema),
+        )[0]
 
     return sink
 

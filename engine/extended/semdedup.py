@@ -168,7 +168,8 @@ def pairwise_sims(
     uniform, 8.5 → 0.85 s on the hot-cluster skew fixture at sf0.1.)
     Leave None at corpus scale, where cluster count ≫ cores spreads the
     join naturally and the extra exchange of the capped corpus would be
-    pure cost.
+    pure cost.  It requires ``cluster_cap``: uncapped, the forced broadcast
+    would be corpus-sized, so that combination raises ``ValueError``.
 
     ``cluster_cap`` bounds the mega-cluster failure mode (one skewed cluster
     turning the whole job into a single O(size²) bucket): only the
@@ -179,9 +180,15 @@ def pairwise_sims(
     pairs (they are all KEPT by the downstream anti-join); re-cluster with a
     larger k when that matters.  The DEFAULT is 500 (mirroring
     ``bucket_cap``) so an unconfigured caller at corpus scale is bounded
-    without doing anything; pass ``None`` explicitly for the uncapped
-    oracle-exact behavior (the registry queries do).
+    without doing anything; pass ``None`` explicitly for uncapped, exact
+    pair generation.
     """
+    if probe_parallelism and not cluster_cap:
+        raise ValueError(
+            f"probe_parallelism={probe_parallelism} needs a cluster_cap: it"
+            " broadcasts the pair join's build side, which with"
+            f" cluster_cap={cluster_cap!r} is the whole corpus"
+        )
     if cluster_cap:
         df = _apply_cluster_cap(df, cluster_col, id_col, cluster_cap)
     v = df.select(

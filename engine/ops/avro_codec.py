@@ -5,32 +5,22 @@ schema (lib/pipeline_controller.py:59,241-242).  The harness image ships
 neither the ``spark-avro`` SQL datasource jar nor a Python avro wheel, so the
 engine carries a minimal, dependency-free implementation of the Avro binary
 spec (zigzag-varint longs, length-prefixed utf8/bytes, union-index prefix) —
-sufficient for the flat nullable-primitive records this pipeline emits, and
-exposed as an Arrow-batched pandas UDF so encoding runs executor-side.
+sufficient for the flat nullable-primitive records this pipeline emits.  The
+sink calls :func:`encode_record` per row inside its executor-side put pass
+(:func:`engine.ops.sinks.kinesis_put_partitions`).
 
 Spec: https://avro.apache.org/docs/1.11.1/specification/ (binary encoding).
-If ``pyspark.sql.avro.functions.to_avro`` is available (spark-avro jar on the
-classpath), :func:`to_avro_col` uses it instead — same wire format.
 """
 
 from __future__ import annotations
 
-import json
 import struct
 from typing import Any
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
 
 __all__ = [
     "zigzag_encode",
     "encode_record",
     "decode_record",
-    "avro_encode_udf",
-    "to_avro_col",
 ]
 
 
@@ -128,34 +118,3 @@ def decode_record(buf: bytes, schema: dict) -> dict:
     for field in schema["fields"]:
         rec[field["name"]], pos = _decode_value(buf, pos, field["type"])
     return rec
-
-
-def avro_encode_udf(schema: dict):
-    """Arrow-batched encoder: struct column → Avro-binary column."""
-    schema_fields = schema["fields"]
-
-    @pandas_udf(BinaryType())
-    def _encode(s: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as a pandas DataFrame of fields
-        recs = s.to_dict("records")
-        fixed = [
-            {k: (None if pd.isna(v) else v) for k, v in r.items()} for r in recs
-        ]
-        return pd.Series(
-            [encode_record(r, {"fields": schema_fields}) for r in fixed]
-        )
-
-    return _encode
-
-
-def to_avro_col(df: DataFrame, cols: list[str], schema: dict) -> Column:
-    """Avro-encode ``struct(cols)``; prefers the JVM ``to_avro`` when loaded."""
-    st = F.struct(*[F.col(c) for c in cols])
-    try:  # pragma: no cover - jar not present in harness image
-        from pyspark.sql.avro.functions import to_avro
-
-        probe = df.sparkSession.range(1).select(to_avro(F.struct("id")))
-        probe.schema  # forces analysis; raises if datasource missing
-        return to_avro(st, json.dumps(schema))
-    except Exception:
-        return avro_encode_udf(schema)(st)

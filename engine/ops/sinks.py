@@ -1,14 +1,15 @@
-"""Record sinks (SURVEY §2.1 S7/S8): Avro projection + Kinesis-style batched put.
+"""Record sink (SURVEY §2.1 S7/S8): Avro-encode and put to Kinesis in chunks.
 
 The reference Avro-encodes each record and PutRecords them to Kinesis in
-chunks of ≤500 (lib/pipeline_controller.py:241-244; config/production.yaml:12),
-with an ``IGNORE_KINESIS`` dry-run flag (:72).  OSS Spark has no first-party
-Kinesis sink, so the put is one ``mapInArrow`` pass
-(:func:`kinesis_put_partitions`) that calls a *transport* — injected, like the
-geocode transports, so tests capture records and production plugs in boto3
-``put_records``.  Each partition puts its own ≤500-record chunks and yields
-one (records, bytes) row per put; the driver sums those rows.  The put is
-therefore a SQL execution with operator metrics, and the count is what the
+chunks of ≤500 (lib/pipeline_controller.py:241-244; config/production.yaml:12);
+its ``IGNORE_KINESIS`` flag (:72) skips only the put.  OSS Spark has no
+first-party Kinesis sink, so the sink is one ``mapInArrow`` pass
+(:func:`kinesis_put_partitions`) that encodes each row and calls a
+*transport* — injected, like the geocode transports: production plugs in
+:func:`boto3_kinesis_transport`, a dry run :func:`discard_transport`, tests a
+file-backed recorder.  Each partition puts its own ≤500-record chunks and
+yields one (records, bytes) row per put; the driver sums those rows.  The put
+is therefore a SQL execution with operator metrics, and the count is what the
 transport accepted: a put that raises fails the sink.
 
 Delivery semantics: at-least-once, matching the reference (SURVEY §7 risk 3) —
@@ -26,14 +27,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from engine.ops.avro_codec import to_avro_col
-
 __all__ = [
-    "avro_project",
-    "kinesis_put_batch",
     "kinesis_put_partitions",
-    "write_kinesis",
-    "CollectingTransport",
+    "discard_transport",
     "KinesisPutError",
 ]
 
@@ -52,24 +48,9 @@ class KinesisPutError(RuntimeError):
     """Records the stream still refused after the last retry."""
 
 
-def avro_project(df: DataFrame, cols: list[str], avro_schema: dict) -> DataFrame:
-    """S7: project the sink columns into one Avro-binary ``record`` column.
-
-    Skips the reference's DataFrame→JSON→dict hop (F13,
-    lib/pipeline_controller.py:241-242) — encode straight from the columnar
-    batch."""
-    return df.select(to_avro_col(df, cols, avro_schema).alias("record"))
-
-
-def kinesis_put_batch(
-    records: list, transport: KinesisTransport, *, batch_id: int = 0
-) -> int:
-    """Chunk ≤500 and put in order; returns number of service calls."""
-    calls = 0
-    for i in range(0, len(records), KINESIS_MAX_BATCH):
-        transport(records[i : i + KINESIS_MAX_BATCH], batch_id)
-        calls += 1
-    return calls
+def discard_transport(records: list, batch_id: int) -> None:
+    """Dry-run transport (the reference's ``IGNORE_KINESIS``): accepts every
+    record and sends none, so a dry run still encodes each row."""
 
 
 def kinesis_put_partitions(
@@ -77,16 +58,14 @@ def kinesis_put_partitions(
     transport: KinesisTransport,
     *,
     batch_id: int = 0,
-    encode: Callable[[dict], bytes] | None = None,
+    encode: Callable[[dict], bytes],
 ) -> tuple[int, int]:
-    """Executor-side put as one ``mapInArrow`` pass: each partition puts its
-    records in ≤500-record chunks, in order, and yields one (records, bytes)
-    row per put.  Returns their sums (records, bytes), read through
-    ``toLocalIterator`` so the driver never holds the batch.
-
-    ``encode`` turns each row (a dict of ``df``'s columns) into its record
-    bytes inside the same pass; without it ``df`` holds one binary
-    ``record`` column.  The transport must be picklable (e.g.
+    """Executor-side encode and put as one ``mapInArrow`` pass: ``encode``
+    turns each row (a dict of ``df``'s columns) into its record bytes, and
+    each partition puts its records in ≤500-record chunks, in row order,
+    yielding one (records, bytes) row per put.  Returns their sums
+    (records, bytes), read through ``toLocalIterator`` so the driver never
+    holds the batch.  The transport must be picklable (e.g.
     :func:`boto3_kinesis_transport`).
     """
 
@@ -99,11 +78,7 @@ def kinesis_put_partitions(
 
         buf: list = []
         for rb in batches:
-            buf += (
-                [encode(r) for r in rb.to_pylist()]
-                if encode is not None
-                else rb.column("record").to_pylist()
-            )
+            buf += [encode(r) for r in rb.to_pylist()]
             while len(buf) >= KINESIS_MAX_BATCH:
                 yield put(buf[:KINESIS_MAX_BATCH])
                 buf = buf[KINESIS_MAX_BATCH:]
@@ -116,67 +91,6 @@ def kinesis_put_partitions(
     )
     [row] = summed.toLocalIterator()
     return row["records"], row["bytes"]
-
-
-def write_kinesis(
-    df: DataFrame,
-    transport: KinesisTransport | None,
-    *,
-    batch_id: int = 0,
-    dry_run: bool = False,
-    mode: str = "executor",
-) -> int:
-    """Put an Avro-record DataFrame (one binary ``record`` column) to the sink.
-
-    ``mode='executor'`` (the scale path): :func:`kinesis_put_partitions` — puts
-    run executor-side in parallel and the driver never holds the batch.
-
-    ``mode='driver'``: collect then put from the driver — for tests with
-    in-memory transports and for strictly-ordered streams (the reference puts
-    from its single process, preserving batch order).
-
-    Returns the record count; dry-run counts without calling the transport
-    (mirrors the reference's IGNORE_KINESIS flag).
-    """
-    if dry_run or transport is None:
-        return df.count()
-
-    if mode == "driver":
-        records = [row["record"] for row in df.collect()]
-        kinesis_put_batch(records, transport, batch_id=batch_id)
-        return len(records)
-
-    return kinesis_put_partitions(df, transport, batch_id=batch_id)[0]
-
-
-class CollectingTransport:
-    """In-memory transport for tests (driver-side only — mirrors the
-    reference's mocked KinesisClient).
-
-    Use with ``mode='driver'``: under the default ``mode='executor'`` the
-    transport would be pickled into Python workers, puts would mutate
-    worker-side copies, and the sink would still report the full record
-    count — success with zero records visible on the driver (advice-review
-    catch r8).  Pickling therefore FAILS LOUDLY: task serialization raises
-    before any put runs, instead of the silent record loss."""
-
-    def __init__(self):
-        self.batches: list[tuple[int, list]] = []
-
-    def __call__(self, records: list, batch_id: int) -> None:
-        self.batches.append((batch_id, list(records)))
-
-    def __getstate__(self):
-        raise TypeError(
-            "CollectingTransport is driver-side only: shipping it to"
-            " executors (write_kinesis mode='executor') would collect into"
-            " worker-side copies and silently drop every record — pass"
-            " mode='driver', or use a picklable transport"
-        )
-
-    @property
-    def records(self) -> list:
-        return [r for _, batch in self.batches for r in batch]
 
 
 def boto3_kinesis_transport(stream_name: str) -> KinesisTransport:

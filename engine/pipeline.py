@@ -146,16 +146,12 @@ def new_patrons_graph(
     # NEW mode: nothing cached — geocode every address (reference :203-208)
     if census is not None:
         d = with_geoid(d, census, geosupport)
-    else:
-        d = d.withColumn("geoid", F.lit(None).cast("string"))
     d = (
         d.withColumn("postal_code", zip5("postal_code"))
         .withColumn(
             "creation_date_et",
-            F.to_date(F.from_utc_timestamp(F.col("creation_timestamp"), "America/New_York")).cast("string"),
+            F.to_date(F.from_utc_timestamp(F.col("creation_timestamp"), "America/New_York")),
         )
-        .withColumn("circ_active_date_et", F.col("circ_active_date_et").cast("string"))
-        .withColumn("deletion_date_et", F.col("deletion_date_et").cast("string"))
         .withColumn(
             "initial_patron_home_library_code", F.col("patron_home_library_code")
         )
@@ -218,14 +214,9 @@ def updated_patrons_graph(
         "initial_patron_home_library_code",
         F.coalesce("cached_iphlc", "wh_iphlc", "patron_home_library_code"),
     ).drop("cached_patron_id", "cached_geoid", "cached_iphlc", "wh_iphlc")
-    d = (
-        d.withColumn("postal_code", zip5("postal_code"))
-        .withColumn(
-            "creation_date_et",
-            F.to_date(F.from_utc_timestamp(F.col("creation_timestamp"), "America/New_York")).cast("string"),
-        )
-        .withColumn("circ_active_date_et", F.col("circ_active_date_et").cast("string"))
-        .withColumn("deletion_date_et", F.col("deletion_date_et").cast("string"))
+    d = d.withColumn("postal_code", zip5("postal_code")).withColumn(
+        "creation_date_et",
+        F.to_date(F.from_utc_timestamp(F.col("creation_timestamp"), "America/New_York")),
     )
     return _finalize(d)
 
@@ -251,9 +242,7 @@ def deleted_patrons_graph(
         "circ_active_date_et", "wh_circ_active_date_et"
     )
     d = R.left_join_broadcast(d, wh, on="patron_id")
-    d = d.withColumn("deletion_date_et", F.col("deletion_date_et").cast("string")).withColumn(
-        "circ_active_date_et", F.col("wh_circ_active_date_et")
-    )
+    d = d.withColumn("circ_active_date_et", F.col("wh_circ_active_date_et"))
     return _finalize(d)
 
 

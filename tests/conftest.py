@@ -112,3 +112,47 @@ def geocode_log(tmp_path):
         return out
 
     return SimpleNamespace(census=census, geosupport=geosupport, read=read)
+
+
+@pytest.fixture()
+def kinesis_log(tmp_path):
+    """File-backed recording Kinesis transport.  Each put appends its
+    ``batch_id``, record count and length-prefixed records to a file named
+    after the process that makes it, so puts from one partition read back
+    in order; ``read()`` returns every put as ``(batch_id, records)`` and
+    ``records()`` the records of all puts.  The transport is a nested
+    function, so cloudpickle ships it by value to the Python workers."""
+    from types import SimpleNamespace
+
+    log_dir = str(tmp_path / "kinesis-log")
+    os.makedirs(log_dir)
+
+    def transport(records, batch_id):
+        out = bytearray(batch_id.to_bytes(8, "big") + len(records).to_bytes(4, "big"))
+        for r in records:
+            out += len(r).to_bytes(4, "big") + bytes(r)
+        with open(os.path.join(log_dir, f"{os.getpid()}.puts"), "ab") as f:
+            f.write(out)
+
+    def read():
+        puts = []
+        for name in sorted(os.listdir(log_dir)):
+            with open(os.path.join(log_dir, name), "rb") as f:
+                buf = f.read()
+            pos = 0
+            while pos < len(buf):
+                batch_id = int.from_bytes(buf[pos : pos + 8], "big")
+                n = int.from_bytes(buf[pos + 8 : pos + 12], "big")
+                pos += 12
+                records = []
+                for _ in range(n):
+                    size = int.from_bytes(buf[pos : pos + 4], "big")
+                    records.append(buf[pos + 4 : pos + 4 + size])
+                    pos += 4 + size
+                puts.append((batch_id, records))
+        return puts
+
+    def records():
+        return [r for _, batch in read() for r in batch]
+
+    return SimpleNamespace(transport=transport, read=read, records=records)

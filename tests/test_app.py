@@ -9,22 +9,18 @@ from pyspark.sql import functions as F
 
 from engine.app import make_avro_kinesis_sink, run_all_modes
 from engine.ops.avro_codec import decode_record
-from engine.ops.sinks import CollectingTransport
 from engine.ops.state import LocalJsonStateStore
 from engine.pipeline import PipelineConfig
 from engine.schemas import SINK_AVRO_SCHEMA, SINK_RECORD
 
 
-def test_run_all_modes_cross_mode_dedup(spark, sierra_df, tmp_path):
+def test_run_all_modes_cross_mode_dedup(spark, sierra_df, tmp_path, kinesis_log):
     """A patron seen in NEW mode must not re-emit from UPDATED mode in the
     same run (reference pins this with pre-seeded processed_ids,
     tests/test_pipeline_controller.py:451-459)."""
     store = LocalJsonStateStore(str(tmp_path / "state.json"))
     cfg = PipelineConfig(salt="app", batch_size=10)
-    transport = CollectingTransport()
-    # driver mode: CollectingTransport is driver-side-only; the factory
-    # default is the executor-side put pass.
-    sink = make_avro_kinesis_sink(transport, mode="driver")
+    sink = make_avro_kinesis_sink(kinesis_log.transport)
     patron_info = spark.createDataFrame([], SINK_RECORD)
     deleted = spark.createDataFrame(
         [(123, dt.date(2021, 5, 1)), (555, dt.date(2021, 5, 2))],
@@ -49,7 +45,7 @@ def test_run_all_modes_cross_mode_dedup(spark, sierra_df, tmp_path):
     # DELETED: 123 already processed this run → only 555 emits
     assert report.deleted.rows_out == 1
 
-    decoded = [decode_record(bytes(b), SINK_AVRO_SCHEMA) for b in transport.records]
+    decoded = [decode_record(b, SINK_AVRO_SCHEMA) for b in kinesis_log.records()]
     assert len(decoded) == 4
     # the deleted record carries its deletion date on the wire
     deleted_recs = [d for d in decoded if d["deletion_date_et"] is not None]
@@ -87,14 +83,14 @@ def _patron_rows():
     return new, upd
 
 
-def test_run_all_modes_geocodes_each_patron_once_per_round(spark, tmp_path, geocode_log):
+def test_run_all_modes_geocodes_each_patron_once_per_round(
+    spark, tmp_path, geocode_log, kinesis_log
+):
     """Over keyset-paged micro-batches (several per mode, inclusive
     re-reads), each distinct addressable patron reaches census attempt 1
     exactly once in the round; attempt 2 sees exactly the attempt-1 misses,
     Geosupport exactly the attempt-2 misses with house, street and postal
     code; the sink's records carry the first answer of the three."""
-    import glob
-    import os
     from collections import Counter
 
     from engine.ops.geocode import fake_census_transport, fake_geosupport
@@ -118,20 +114,10 @@ def test_run_all_modes_geocodes_each_patron_once_per_round(spark, tmp_path, geoc
         [(1, dt.date(2021, 5, 1)), (2, dt.date(2021, 5, 2)), (201, dt.date(2021, 5, 3))],
         "patron_id_plaintext long, deletion_date_et date",
     )
-    puts_dir = str(tmp_path / "puts")
-    os.makedirs(puts_dir)
-
-    def transport(records, batch_id):
-        import uuid
-
-        with open(os.path.join(puts_dir, uuid.uuid4().hex), "wb") as f:
-            for r in records:
-                f.write(len(r).to_bytes(4, "big") + bytes(r))
-
     report = run_all_modes(
         spark, cfg, LocalJsonStateStore(str(tmp_path / "state.json")),
         active_source=active, deleted_source=deleted, patron_info=patron_info,
-        sink=make_avro_kinesis_sink(transport),
+        sink=make_avro_kinesis_sink(kinesis_log.transport),
         census=geocode_log.census(fake_census_transport(match_rate_mod=2)),
         geosupport=geocode_log.geosupport(fake_geosupport()),
         now=dt.datetime(2021, 6, 1),
@@ -170,14 +156,7 @@ def test_run_all_modes_geocodes_each_patron_once_per_round(spark, tmp_path, geoc
                 want.setdefault(r["patron_id"], a)
     for pid, args in eligible:
         want.setdefault(pid, fake_geosupport()(*args))
-    records = []
-    for path in glob.glob(os.path.join(puts_dir, "*")):
-        buf = open(path, "rb").read()
-        pos = 0
-        while pos < len(buf):
-            n = int.from_bytes(buf[pos:pos + 4], "big")
-            records.append(decode_record(buf[pos + 4:pos + 4 + n], SINK_AVRO_SCHEMA))
-            pos += 4 + n
+    records = [decode_record(r, SINK_AVRO_SCHEMA) for r in kinesis_log.records()]
     got = {r["patron_id"]: r["geoid"] for r in records if r["patron_id"] in expected}
     assert got == {pid: want.get(pid) for pid in expected}
 

@@ -3,18 +3,11 @@
 from __future__ import annotations
 
 from engine.ops.avro_codec import (
-    avro_encode_udf,
     decode_record,
     encode_record,
     zigzag_encode,
 )
-from engine.ops.sinks import (
-    KINESIS_MAX_BATCH,
-    CollectingTransport,
-    avro_project,
-    kinesis_put_batch,
-    write_kinesis,
-)
+from engine.ops.sinks import KINESIS_MAX_BATCH, kinesis_put_partitions
 from engine.schemas import SINK_AVRO_SCHEMA, SINK_RECORD
 
 
@@ -46,64 +39,28 @@ def test_record_round_trip():
     assert decode_record(buf, SINK_AVRO_SCHEMA) == rec
 
 
-def test_avro_project_and_decode(spark, sierra_df):
-    from engine.pipeline import PipelineConfig, new_patrons_graph
+def test_kinesis_batching_caps_at_500(spark, kinesis_log):
+    """1203 records from one partition go out as puts of 500, 500 and 203,
+    in row order, each tagged with the batch id; over two partitions no put
+    holds more than 500 and every record arrives once."""
 
-    out = new_patrons_graph(sierra_df, PipelineConfig(salt="s"))
-    cols = [f.name for f in SINK_RECORD.fields]
-    enc = avro_project(out, cols, SINK_AVRO_SCHEMA)
-    assert enc.columns == ["record"]
-    records = [bytes(r["record"]) for r in enc.collect()]
-    decoded = [decode_record(b, SINK_AVRO_SCHEMA) for b in records]
-    assert {d["postal_code"] for d in decoded} >= {"10001", "11201"}
+    def encode(row):
+        return f"rec{row['id']}".encode()
 
+    one = spark.range(0, 1203, numPartitions=1)
+    n, size = kinesis_put_partitions(one, kinesis_log.transport, batch_id=7, encode=encode)
+    expected = [f"rec{i}".encode() for i in range(1203)]
+    assert (n, size) == (1203, sum(map(len, expected)))
+    puts = kinesis_log.read()
+    assert [len(records) for _, records in puts] == [KINESIS_MAX_BATCH, KINESIS_MAX_BATCH, 203]
+    assert {batch_id for batch_id, _ in puts} == {7}
+    assert kinesis_log.records() == expected
 
-def test_kinesis_batching_caps_at_500():
-    transport = CollectingTransport()
-    calls = kinesis_put_batch([b"x"] * 1203, transport, batch_id=7)
-    assert calls == 3
-    sizes = [len(b) for _, b in transport.batches]
-    assert sizes == [KINESIS_MAX_BATCH, KINESIS_MAX_BATCH, 203]
-    assert all(bid == 7 for bid, _ in transport.batches)
-
-
-def test_write_kinesis_driver_mode_and_dry_run(spark):
-    df = spark.createDataFrame([(b"a",), (b"b",)], "record binary")
-    transport = CollectingTransport()
-    n = write_kinesis(df, transport, mode="driver")
-    assert n == 2 and len(transport.records) == 2
-    n2 = write_kinesis(df, transport, dry_run=True)
-    assert n2 == 2 and len(transport.records) == 2  # dry run: no new puts
-
-
-def test_write_kinesis_executor_mode(spark, tmp_path):
-    """Executor-side puts: a picklable file-based transport records each
-    chunk from the worker processes; chunking and totals must hold across
-    partitions."""
-    import glob
-    import os
-    import uuid
-
-    out_dir = str(tmp_path / "puts")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def transport(records, batch_id):
-        p = os.path.join(out_dir, f"{batch_id}-{uuid.uuid4().hex}.chunk")
-        with open(p, "wb") as f:
-            f.write(b"\n".join(bytes(r) for r in records))
-
-    df = spark.createDataFrame(
-        [(f"rec{i}".encode(),) for i in range(1203)], "record binary"
-    ).repartition(3)
-    n = write_kinesis(df, transport, batch_id=9, mode="executor")
-    assert n == 1203
-    chunks = glob.glob(f"{out_dir}/9-*.chunk")
-    sizes = sorted(
-        len(open(c, "rb").read().split(b"\n")) for c in chunks
-    )
-    assert sum(sizes) == 1203
-    assert max(sizes) <= KINESIS_MAX_BATCH  # no chunk exceeds the service cap
-    assert len(chunks) >= 3  # at least one put per partition
+    two = spark.range(0, 1203, numPartitions=2)
+    assert kinesis_put_partitions(two, kinesis_log.transport, batch_id=9, encode=encode)[0] == 1203
+    sizes = [len(records) for batch_id, records in kinesis_log.read() if batch_id == 9]
+    assert sorted(sizes) == [101, 102, KINESIS_MAX_BATCH, KINESIS_MAX_BATCH]
+    assert len(kinesis_log.records()) == 2 * 1203
 
 
 # -- registry fetch + startup schema guard (SURVEY §1.3) -----------------------
@@ -182,65 +139,16 @@ def test_sink_construction_fails_fast_on_drifted_registry(spark):
     assert sink(df, 0) == 1
 
 
-def test_write_kinesis_default_mode_never_collects(spark, tmp_path, monkeypatch):
-    """VERDICT r6 #3: the DEFAULT path must be the executor-side put —
-    nobody should ship the driver collect to a real cluster by habit.
-    Pinned by poisoning ``collect`` on the frame's concrete class (Spark's
-    classic DataFrame overrides the base method) for the call: the default
-    mode must deliver every record without touching it; mode='driver'
-    remains an explicit ordered-put opt-in."""
-    import glob
-    import os
-    import uuid
-
-    out_dir = str(tmp_path / "dputs")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def transport(records, batch_id):
-        p = os.path.join(out_dir, f"{batch_id}-{uuid.uuid4().hex}.chunk")
-        with open(p, "wb") as f:
-            f.write(b"\n".join(bytes(r) for r in records))
-
-    def poisoned_collect(self):
-        raise AssertionError("default write_kinesis path called df.collect()")
-
-    df = spark.createDataFrame(
-        [(f"r{i}".encode(),) for i in range(700)], "record binary"
-    ).repartition(2)
-    monkeypatch.setattr(type(df), "collect", poisoned_collect)
-    n = write_kinesis(df, transport, batch_id=3)  # no mode: the default
-    assert n == 700
-    total = 0
-    for p in glob.glob(f"{out_dir}/3-*.chunk"):
-        with open(p, "rb") as f:
-            total += len(f.read().split(b"\n"))
-    assert total == 700
-
-
-def test_avro_sink_factory_default_never_collects(spark, tmp_path, monkeypatch):
-    """VERDICT r7 #8: the app-level sink factory must carry the same
-    collect-free default as the raw sink — its old body collected every
-    encoded record on the driver unconditionally.  Pinned the same way:
-    poison ``collect`` on the frame's concrete class, run the
-    factory-default sink end to end (encode + executor put), and require
-    every record delivered."""
-    import glob
-    import os
-    import uuid
-
+def test_avro_sink_factory_default_never_collects(spark, kinesis_log, monkeypatch):
+    """VERDICT r7 #8: the app-level sink factory must not collect the batch
+    on the driver — an earlier body collected every encoded record there
+    unconditionally.  Pinned by poisoning ``collect`` on the frame's
+    concrete class (Spark's classic DataFrame overrides the base method),
+    running the sink end to end (encode + executor put) and requiring every
+    record delivered."""
     from engine.app import make_avro_kinesis_sink
 
-    out_dir = str(tmp_path / "fputs")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def transport(records, batch_id):
-        # record COUNT per put, not joined bytes: Avro binaries may
-        # contain the join byte, so a split-based recount would drift.
-        p = os.path.join(out_dir, f"{batch_id}-{uuid.uuid4().hex}.chunk")
-        with open(p, "w") as f:
-            f.write(str(len(records)))
-
-    sink = make_avro_kinesis_sink(transport)  # no mode: the default
+    sink = make_avro_kinesis_sink(kinesis_log.transport)
     rows = []
     for i in range(7):
         row = {f.name: None for f in SINK_RECORD.fields}
@@ -255,60 +163,32 @@ def test_avro_sink_factory_default_never_collects(spark, tmp_path, monkeypatch):
         ),
     )
     assert sink(df, 5) == 7
-    total = 0
-    for p in glob.glob(f"{out_dir}/5-*.chunk"):
-        with open(p) as f:
-            total += int(f.read())
-    assert total == 7
+    puts = kinesis_log.read()
+    assert {batch_id for batch_id, _ in puts} == {5}
+    decoded = [decode_record(r, SINK_AVRO_SCHEMA) for r in kinesis_log.records()]
+    assert sorted(d["patron_id"] for d in decoded) == [f"p{i}" for i in range(7)]
 
 
 def test_dry_run_sink_still_evaluates_the_encoder(spark, monkeypatch):
-    """r8 review catch: routing the factory sink through write_kinesis made
-    dry_run return a bare count, which let Catalyst PRUNE the encode
-    projection — a dry 'validation' that never ran the encoder.  Pinned by
-    substituting an encoder column that raises ON EVALUATION
-    (assert_true(false)): if the dry-run path prunes the encode, no error
-    surfaces and this test fails; the fixed path aggregates over the
-    record bytes, forcing every row through the encoder."""
-    import engine.app as app_mod
-    from engine.app import make_avro_kinesis_sink
-    from pyspark.sql import functions as SF
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
+    """A dry run (the reference's IGNORE_KINESIS) skips only the put: every
+    row still goes through the production encoder, so a record that cannot
+    be encoded fails the dry run too.  Pinned by giving the sink an encoder
+    that raises when called."""
     import pytest
 
-    monkeypatch.setattr(
-        app_mod,
-        "to_avro_col",
-        lambda df, cols, schema: SF.assert_true(SF.lit(False)).cast("binary"),
-    )
+    import engine.app as app_mod
+    from engine.app import make_avro_kinesis_sink
+
+    def broken_encoder(record, schema):
+        raise ValueError("encoder called on a dry run")
+
+    monkeypatch.setattr(app_mod, "encode_record", broken_encoder)
     sink = make_avro_kinesis_sink(None, dry_run=True)
     row = {f.name: None for f in SINK_RECORD.fields}
     row.update(patron_id="p1", ptype_code=3)
     df = spark.createDataFrame([row], SINK_RECORD)
-    with pytest.raises(Exception, match="(?i)not true|assert"):
+    with pytest.raises(Exception, match="encoder called on a dry run"):
         sink(df, 0)
-
-
-def test_collecting_transport_refuses_executor_mode(spark):
-    """advice r8: CollectingTransport under the default mode='executor'
-    was silently broken (puts mutated pickled worker-side copies while
-    the sink still reported full counts).  Pickling now raises, so the
-    misuse fails at task serialization instead of losing every record."""
-    import pickle
-
-    import pytest
-
-    transport = CollectingTransport()
-    with pytest.raises(TypeError, match="driver-side only"):
-        pickle.dumps(transport)
-    df = spark.createDataFrame([(b"a",), (b"b",)], "record binary")
-    with pytest.raises(Exception, match="driver-side only"):
-        write_kinesis(df, transport, mode="executor")
-    assert transport.records == []  # nothing silently 'delivered'
-    # driver mode remains the sanctioned path
-    assert write_kinesis(df, transport, mode="driver") == 2
-    assert len(transport.records) == 2
 
 
 def test_boto3_transport_retries_failed_records_then_raises(monkeypatch):
@@ -354,19 +234,21 @@ def test_boto3_transport_retries_failed_records_then_raises(monkeypatch):
     assert calls == [[b"x", b"y"]] + [[b"x"]] * (sinks.PUT_ATTEMPTS - 1)
 
 
-def test_executor_put_runs_as_a_sql_execution(spark):
-    """The default put is a SQL execution: its Python pass shows in the SQL
-    status store as a MapInArrow node with Python-worker metrics."""
+def test_executor_put_runs_as_a_sql_execution(spark, kinesis_log):
+    """The put is a SQL execution: its Python pass shows in the SQL status
+    store as a MapInArrow node with Python-worker metrics.  A dry run is
+    the same execution with a transport that discards: it counts the
+    record and puts nothing."""
     from engine.app import make_avro_kinesis_sink
-
-    def transport(records, batch_id):
-        pass
 
     row = {f.name: None for f in SINK_RECORD.fields}
     row.update(patron_id="p1", ptype_code=3)
-    assert make_avro_kinesis_sink(transport)(spark.createDataFrame([row], SINK_RECORD), 0) == 1
     store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    eid = execs.apply(execs.size() - 1).executionId()
-    dot = store.planGraph(eid).makeDotFile(store.executionMetrics(eid))
-    assert "MapInArrow" in dot and "time to run Python workers" in dot
+    for dry_run in (False, True):
+        sink = make_avro_kinesis_sink(kinesis_log.transport, dry_run=dry_run)
+        assert sink(spark.createDataFrame([row], SINK_RECORD), 0) == 1
+        execs = store.executionsList()
+        eid = execs.apply(execs.size() - 1).executionId()
+        dot = store.planGraph(eid).makeDotFile(store.executionMetrics(eid))
+        assert "MapInArrow" in dot and "time to run Python workers" in dot
+        assert len(kinesis_log.records()) == 1  # the live put's record only

@@ -127,7 +127,7 @@ def test_r12_semdedup_probe_spread_forces_broadcast(spark):
     )
     out = pairwise_sims(
         df, cluster_col="label", id_col="vec_id", vec_col="embedding",
-        probe_parallelism=4, cluster_cap=None,
+        probe_parallelism=4, cluster_cap=500,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan

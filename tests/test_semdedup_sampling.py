@@ -164,6 +164,29 @@ def test_semdedup_incremental_rejects_corpus_twins_and_batch_dups(spark):
     assert kept == {13, 17}
 
 
+def test_probe_parallelism_without_cluster_cap_raises_at_entry(spark):
+    """``probe_parallelism`` broadcasts the pair join's build side, so an
+    uncapped call would broadcast the whole corpus: every entry point
+    refuses the combination before building a plan."""
+    import pytest
+
+    from engine.extended.semdedup import semdedup_incremental
+
+    df = _vecs(spark)
+    calls = [
+        lambda cap: pairwise_sims(df, probe_parallelism=4, cluster_cap=cap),
+        lambda cap: semdedup(df, threshold=0.9, probe_parallelism=4, cluster_cap=cap),
+        lambda cap: semdedup_incremental(
+            df, df, threshold=0.9, probe_parallelism=4, cluster_cap=cap
+        ),
+    ]
+    for call in calls:
+        for cap in (None, 0):
+            with pytest.raises(ValueError, match="needs a cluster_cap"):
+                call(cap)
+    assert pairwise_sims(df, probe_parallelism=4, cluster_cap=500).count() == 10
+
+
 def test_cluster_cap_truncation_warns_once(spark):
     """The r5 default flip (cluster_cap None -> 500) silently changes
     unconfigured callers' results; the first capped call per process that

@@ -8,9 +8,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from engine.ops.avro_codec import decode_record
-from engine.ops.sinks import avro_project, kinesis_put_batch, CollectingTransport
 from engine.ops.skew import null_safe_split_join, salted_join
-from engine.schemas import EVENTS, SINK_AVRO_SCHEMA, SINK_RECORD
+from engine.schemas import SINK_AVRO_SCHEMA
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -90,29 +89,26 @@ def test_ivf_seeded_empty_cluster_keeps_seed(spark):
     assert len(cents) == 4 and all(len(c) == 2 for c in cents)
 
 
-def test_streaming_avro_kinesis_end_to_end(spark, tmp_path, sierra_df):
+def test_streaming_avro_kinesis_end_to_end(spark, tmp_path, sierra_df, kinesis_log):
     """The full north-star chain as a streaming job: parquet stream →
     pipeline graph → Avro encode → 500-chunked Kinesis put — then decode the
     wire bytes and check the records."""
+    from engine.app import make_avro_kinesis_sink
     from engine.pipeline import PipelineConfig, new_patrons_graph
     from engine.streaming.incremental import parquet_stream, run_available_now
 
     src = str(tmp_path / "src")
     sierra_df.write.mode("overwrite").parquet(src)
     cfg = PipelineConfig(salt="e2e")
-    transport = CollectingTransport()
-    cols = [f.name for f in SINK_RECORD.fields]
+    put = make_avro_kinesis_sink(kinesis_log.transport)
 
     def sink(batch_df, batch_id):
-        out = new_patrons_graph(batch_df, cfg)
-        enc = avro_project(out, cols, SINK_AVRO_SCHEMA)
-        records = [bytes(r["record"]) for r in enc.collect()]
-        kinesis_put_batch(records, transport, batch_id=batch_id)
+        put(new_patrons_graph(batch_df, cfg), batch_id)
 
     stream = parquet_stream(spark, src, sierra_df.schema)
     run_available_now(stream, lambda df: df, sink, str(tmp_path / "ckpt"))
 
-    decoded = [decode_record(b, SINK_AVRO_SCHEMA) for b in transport.records]
+    decoded = [decode_record(b, SINK_AVRO_SCHEMA) for b in kinesis_log.records()]
     assert len(decoded) == 3  # 4 rows, patron 456 deduped
     by_zip = {d["postal_code"] for d in decoded}
     assert "10001" in by_zip and "11201" in by_zip  # zip5 applied on the wire
