@@ -7,7 +7,7 @@ from engine.ops.avro_codec import (
     encode_record,
     zigzag_encode,
 )
-from engine.ops.sinks import KINESIS_MAX_BATCH, kinesis_put_partitions
+from engine.ops.sinks import KINESIS_MAX_BATCH, discard_transport, kinesis_put_partitions
 from engine.schemas import SINK_AVRO_SCHEMA, SINK_RECORD
 
 
@@ -39,6 +39,20 @@ def test_record_round_trip():
     assert decode_record(buf, SINK_AVRO_SCHEMA) == rec
 
 
+def test_avro_project_and_decode(spark, sierra_df, kinesis_log):
+    """Graph output projected onto the sink contract and Avro-encoded by the
+    sink decodes back to its rows, zip5 postal codes included."""
+    from engine.app import make_avro_kinesis_sink
+    from engine.pipeline import PipelineConfig, new_patrons_graph
+
+    out = new_patrons_graph(sierra_df, PipelineConfig(salt="s"))
+    n = make_avro_kinesis_sink(kinesis_log.transport)(out, 0)
+    decoded = [decode_record(r, SINK_AVRO_SCHEMA) for r in kinesis_log.records()]
+    assert n == len(decoded) > 0
+    assert all(set(d) == {f.name for f in SINK_RECORD.fields} for d in decoded)
+    assert {d["postal_code"] for d in decoded} >= {"10001", "11201"}
+
+
 def test_kinesis_batching_caps_at_500(spark, kinesis_log):
     """1203 records from one partition go out as puts of 500, 500 and 203,
     in row order, each tagged with the batch id; over two partitions no put
@@ -61,6 +75,41 @@ def test_kinesis_batching_caps_at_500(spark, kinesis_log):
     sizes = [len(records) for batch_id, records in kinesis_log.read() if batch_id == 9]
     assert sorted(sizes) == [101, 102, KINESIS_MAX_BATCH, KINESIS_MAX_BATCH]
     assert len(kinesis_log.records()) == 2 * 1203
+
+
+def test_write_kinesis_driver_mode_and_dry_run(spark, kinesis_log):
+    """The ordered put the driver mode gave is the single-partition put:
+    records arrive in row order.  A dry run counts the records and puts
+    nothing."""
+    df = spark.createDataFrame([(b"a",), (b"b",)], "record binary").coalesce(1)
+
+    def encode(row):
+        return bytes(row["record"])
+
+    assert kinesis_put_partitions(df, kinesis_log.transport, encode=encode) == (2, 2)
+    assert kinesis_log.records() == [b"a", b"b"]
+    assert kinesis_put_partitions(df, discard_transport, encode=encode) == (2, 2)
+    assert kinesis_log.records() == [b"a", b"b"]  # dry run: no new puts
+
+
+def test_write_kinesis_executor_mode(spark, kinesis_log):
+    """Executor-side puts: the picklable file-backed transport records each
+    chunk from the worker processes; chunking and totals must hold across
+    partitions."""
+    df = spark.createDataFrame(
+        [(f"rec{i}".encode(),) for i in range(1203)], "record binary"
+    ).repartition(3)
+    n, _ = kinesis_put_partitions(
+        df, kinesis_log.transport, batch_id=9, encode=lambda row: bytes(row["record"])
+    )
+    assert n == 1203
+    puts = kinesis_log.read()
+    assert {batch_id for batch_id, _ in puts} == {9}
+    sizes = [len(records) for _, records in puts]
+    assert sum(sizes) == 1203
+    assert max(sizes) <= KINESIS_MAX_BATCH  # no chunk exceeds the service cap
+    assert len(puts) >= 3  # at least one put per partition
+    assert sorted(kinesis_log.records()) == sorted(f"rec{i}".encode() for i in range(1203))
 
 
 # -- registry fetch + startup schema guard (SURVEY §1.3) -----------------------
@@ -137,6 +186,28 @@ def test_sink_construction_fails_fast_on_drifted_registry(spark):
     row.update(patron_id="p1", ptype_code=3)
     df = spark.createDataFrame([row], SINK_RECORD)
     assert sink(df, 0) == 1
+
+
+def test_write_kinesis_default_mode_never_collects(spark, kinesis_log, monkeypatch):
+    """VERDICT r6 #3: the put must be executor-side — nobody should ship a
+    driver collect to a real cluster by habit.  Pinned by poisoning
+    ``collect`` on the frame's concrete class (Spark's classic DataFrame
+    overrides the base method) for the call: the put must deliver every
+    record without touching it."""
+
+    def poisoned_collect(self):
+        raise AssertionError("kinesis_put_partitions called df.collect()")
+
+    df = spark.createDataFrame(
+        [(f"r{i}".encode(),) for i in range(700)], "record binary"
+    ).repartition(2)
+    monkeypatch.setattr(type(df), "collect", poisoned_collect)
+    n, _ = kinesis_put_partitions(
+        df, kinesis_log.transport, batch_id=3, encode=lambda row: bytes(row["record"])
+    )
+    assert n == 700
+    assert {batch_id for batch_id, _ in kinesis_log.read()} == {3}
+    assert len(kinesis_log.records()) == 700
 
 
 def test_avro_sink_factory_default_never_collects(spark, kinesis_log, monkeypatch):
