@@ -8,6 +8,14 @@ Design for 100 TB (the whole point of these operators):
   hyperplane signs) and verifies only within buckets.  Cost is
   O(n · bands) map work + one shuffle on the bucket key + per-bucket
   verification — all-pairs O(n²) never materializes.
+- **one banding path.**  Every banded family runs the same kernel:
+  :func:`band_rows` explodes the family's ``named_struct`` band keys,
+  :func:`cap_per_key` bounds each bucket to its lowest-id rows (the one
+  cap contract: ``None`` is uncapped, ``< 1`` raises), and
+  :func:`band_pairs` self-joins within buckets on ``a.id < b.id``.  Each
+  family keeps its own key expression, payload, persist points and
+  verification.  Frames a plan references twice are pinned with
+  :func:`engine.cache.ledger_persist`.
 - **deterministic.**  All hash families derive from ``xxhash64(value, seed)``
   with literal seeds — rerunning a round yields identical signatures, so the
   operators are testable against fixed expectations and safe to re-run
@@ -19,9 +27,13 @@ Design for 100 TB (the whole point of these operators):
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from engine import cache
 from engine.extended.text import fingerprint, ngrams_from, tokens
 
 __all__ = [
@@ -49,6 +61,9 @@ __all__ = [
     "line_fp_index",
     "line_dedup_incremental",
     "sign_band_structs",
+    "band_rows",
+    "cap_per_key",
+    "band_pairs",
 ]
 
 
@@ -211,8 +226,10 @@ def minhash_sigs(
     return ent.select("id", F.expr(sig).alias("sig"))
 
 
-def _band_col(sig: Column, band: int, rows_per_band: int, hash_fn: str = "xxhash64") -> Column:
-    """Key one band (contiguous signature slice) for the bucket join.
+def _band_key_sql(sig_col: str, band: int, rows_per_band: int, hash_fn: str) -> str:
+    """Key one band (contiguous signature slice) for the bucket join, as SQL
+    text: one py4j call for the whole band array instead of bands ×
+    (element_at/slice + struct) Column objects (see sign_band_structs r10).
 
     xxhash64 mode hashes the raw band elements + band index to a 64-bit
     scalar — no string materialization, narrowest possible exchange key (the
@@ -224,19 +241,6 @@ def _band_col(sig: Column, band: int, rows_per_band: int, hash_fn: str = "xxhash
     and window already pairs bkey with the ``band`` column, so equal slices
     from different bands never collide."""
     if hash_fn == "xxhash64":
-        elems = [
-            F.element_at(sig, band * rows_per_band + i + 1)
-            for i in range(rows_per_band)
-        ]
-        return F.xxhash64(*elems, F.lit(band))
-    return F.slice(sig, band * rows_per_band + 1, rows_per_band)
-
-
-def _band_key_sql(sig_col: str, band: int, rows_per_band: int, hash_fn: str) -> str:
-    """SQL-text sibling of :func:`_band_col` — same key, one py4j call for
-    the whole band array instead of bands × (element_at/slice + struct)
-    Column objects (see sign_band_structs r10)."""
-    if hash_fn == "xxhash64":
         elems = ", ".join(
             f"element_at(`{sig_col}`, {band * rows_per_band + i + 1})"
             for i in range(rows_per_band)
@@ -245,103 +249,72 @@ def _band_key_sql(sig_col: str, band: int, rows_per_band: int, hash_fn: str) -> 
     return f"slice(`{sig_col}`, {band * rows_per_band + 1}, {rows_per_band})"
 
 
-#: semanticHash-keyed ledger of INTERNALLY-persisted frames (signature /
-#: banded frames here; iterative-algorithm statics in graph.py and
-#: linkage.py) — bounds the session cache leak to _LEDGER_CAP frames,
-#: LRU-evicted (dict insertion order).  Cap 6 (r11 opt; was 2): one query
-#: may now pin several static frames at once (pagerank: edges + nodes +
-#: outdeg; triangles: canonical edges + degrees + oriented edges), and a
-#: cap below the per-query working set evicts mid-query — lineage-safe
-#: but silently recomputing exactly the double work the ledger prevents.
-_LEDGER_CAP = 6
-_INTERNAL_SIGS_LAST: dict = {}
+def _minhash_band_keys(
+    num_hashes: int, bands: int, hash_fn: str, tag: str = ""
+) -> list[str]:
+    """``named_struct`` band keys of the ``sig`` column: ``bands`` slices of
+    ``num_hashes // bands`` slots each.  ``tag`` prefixes extra struct
+    fields (the band sweep's width ``w``)."""
+    rows_per_band = num_hashes // bands
+    return [
+        f"named_struct({tag}'band', {b}, "
+        f"'bkey', {_band_key_sql('sig', b, rows_per_band, hash_fn)})"
+        for b in range(bands)
+    ]
 
 
-def ledger_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` under the module's bounded release ledger and return
-    the canonical cached frame for its plan.
+# ---------------------------------------------------------------------------
+# The banding kernel: every banded or blocked candidate generator is
+# band_rows → cap_per_key → band_pairs with its own key expression, payload,
+# persist points and verification.
+# ---------------------------------------------------------------------------
 
-    Keyed by ``df.semanticHash()`` (verified with ``sameSemantics`` against
-    hash collisions): re-requesting the SAME logical plan returns the
-    already-persisted frame instead of evicting and re-persisting it, so a
-    multi-pass bench or two interleaved queries over one corpus pay the
-    signature build once per session, not once per invocation (verdict r9
-    #1/#8 — the previous 1-deep ledger unpersisted the prior entry at BUILD
-    time, thrashing the cache under exactly the interleaved use bench.py
-    exercises).  Distinct plans LRU-evict past ``_LEDGER_CAP`` entries, so
-    the session leak stays bounded (advice r8); unpersist is lineage-safe —
-    an un-collected evictee just recomputes.  Use for any frame a banded
-    self-join references twice: Catalyst does not reuse the exchange across
-    the alias pair, so without the cache the whole signature subtree
-    evaluates once PER SIDE (review catch r9: the frontier recomputed 64
-    md5 minhashes per doc twice).
 
-    Contract: cache hits assume the plan's inputs are unchanged within the
-    session — the same staleness semantics as Spark's own ``persist``, but
-    STRONGER in effect: a hit returns a previously MATERIALIZED frame, so a
-    caller that rewrites its corpus files mid-session and re-runs the same
-    logical plan would get the pre-rewrite data.  GUARD (r12, verdict r11
-    #6): a hit is additionally validated against the requesting plan's
-    ``inputFiles()`` snapshot — Spark writers emit fresh UUID part-file
-    names, so a rewritten source changes the file set and the stale entry
-    is evicted + rebuilt instead of served.  The guard cannot catch an
-    IN-PLACE byte rewrite of an identically-named file (no listing
-    changes); such callers must still :func:`ledger_clear` after rewriting
-    (advice r10).  Entries from a stopped SparkSession are dropped, not
-    returned."""
-    try:
-        key = df.semanticHash()
-    except Exception:  # plan not hashable (e.g. foreign session): no cache
-        df.persist()
+def band_rows(df: DataFrame, keys: list[str] | Column, *cols: str | Column) -> DataFrame:
+    """``cols`` plus the fields of each band key, one row per key.
+
+    ``keys`` is the family's key expression: SQL ``named_struct`` texts
+    (one py4j call for the whole array, see :func:`sign_band_structs`) or
+    an array-of-structs Column.  Each struct's fields (a band index and a
+    bucket key) become the columns that :func:`cap_per_key` and
+    :func:`band_pairs` key on."""
+    if not isinstance(keys, Column):
+        keys = F.expr("array(" + ", ".join(keys) + ")")
+    rows = df.select(*cols, F.explode(keys).alias("bb"))
+    return rows.select(*rows.columns[:-1], "bb.*")
+
+
+def cap_per_key(
+    df: DataFrame, keys: list[str], order_col: str, cap: int | None
+) -> DataFrame:
+    """Keep each ``keys`` bucket's ``cap`` lowest-``order_col`` rows — the
+    one bucket-cap contract of every banded, blocked and clustered
+    candidate generator.
+
+    A degenerate bucket (boilerplate shared by millions of rows) then costs
+    O(cap²) pairs in the self-join instead of O(n²); overflow rows emit no
+    pairs from that bucket.  ``None`` leaves ``df`` uncapped.  ``cap < 1``
+    raises: reading 0 as "no cap" would build exactly the quadratic join
+    the cap exists to prevent."""
+    if cap is None:
         return df
-    hit = _INTERNAL_SIGS_LAST.get(key)
-    if hit is not None:
-        try:
-            if (
-                hit.sparkSession is df.sparkSession
-                and hit.sameSemantics(df)
-                and sorted(hit.inputFiles()) == sorted(df.inputFiles())
-            ):
-                lvl = hit.storageLevel
-                if not (lvl.useMemory or lvl.useDisk):
-                    # an external spark.catalog.clearCache() (bench.py does
-                    # one after every query) strips the persist without
-                    # touching the ledger — returning the bare frame would
-                    # silently restore the double-signature-compute the
-                    # cache exists to prevent; re-pin it
-                    hit.persist()
-                _INTERNAL_SIGS_LAST[key] = _INTERNAL_SIGS_LAST.pop(key)
-                return hit
-        except Exception:
-            pass  # dead session / comparison failure → treat as miss
-        _INTERNAL_SIGS_LAST.pop(key)
-        try:
-            hit.unpersist()
-        except Exception:
-            pass
-    while len(_INTERNAL_SIGS_LAST) >= _LEDGER_CAP:
-        old = _INTERNAL_SIGS_LAST.pop(next(iter(_INTERNAL_SIGS_LAST)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    df.persist()
-    _INTERNAL_SIGS_LAST[key] = df
-    return df
+    if cap < 1:
+        raise ValueError(f"a bucket cap must be >= 1 or None, got {cap}")
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (
+        df.withColumn("__bn", F.row_number().over(w))
+        .filter(F.col("__bn") <= cap)
+        .drop("__bn")
+    )
 
 
-def ledger_clear() -> None:
-    """Invalidate the signature ledger (advice r10): unpersist and drop
-    every cached frame.  Call after rewriting corpus files a cached plan
-    reads — a subsequent ``ledger_persist`` of the same logical plan then
-    rebuilds from the new data instead of serving the stale materialization.
-    Also useful to release executor memory between unrelated pipelines."""
-    while _INTERNAL_SIGS_LAST:
-        old = _INTERNAL_SIGS_LAST.pop(next(iter(_INTERNAL_SIGS_LAST)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+def band_pairs(banded: DataFrame, keys: list[str]) -> DataFrame:
+    """Self-join of ``banded`` on equal ``keys`` with ``a.id < b.id``: one
+    row per bucket two ids share, the sides aliased ``a`` and ``b`` for
+    the family's projection and verification."""
+    a, b = banded.alias("a"), banded.alias("b")
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return a.join(b, reduce(operator.and_, cond + [F.col("a.id") < F.col("b.id")]))
 
 
 def minhash_band_sweep(
@@ -367,43 +340,18 @@ def minhash_band_sweep(
     self-join — exactly the cost profile of a single
     ``minhash_candidates`` call, independent of how many widths sweep.
     """
-    keys = []
-    for w in widths:
-        rpb = num_hashes // w
-        for b in range(w):
-            keys.append(
-                f"named_struct('w', {w}, 'band', {b}, "
-                f"'bkey', {_band_key_sql('sig', b, rpb, hash_fn)})"
-            )
-    banded = sigs.select(
-        "id", F.explode(F.expr("array(" + ", ".join(keys) + ")")).alias("bb")
-    ).select(
-        "id",
-        F.col("bb.w").alias("w"),
-        F.col("bb.band").alias("band"),
-        F.col("bb.bkey").alias("bkey"),
-    )
-    if bucket_cap:
-        wcap = Window.partitionBy("w", "band", "bkey").orderBy("id")
-        banded = (
-            banded.withColumn("__bn", F.row_number().over(wcap))
-            .filter(F.col("__bn") <= bucket_cap)
-            .drop("__bn")
-        )
+    keys = [
+        k for w in widths for k in _minhash_band_keys(num_hashes, w, hash_fn, f"'w', {w}, ")
+    ]
+    bucket = ["w", "band", "bkey"]
+    banded = cap_per_key(band_rows(sigs, keys, "id"), bucket, "id", bucket_cap)
     # both sides of the self-join reference this subtree, and AQE does not
     # reuse the (w, band, bkey) exchange across the alias pair — pin the
     # capped frame so the explode → cap-window chain evaluates once
     # (the minhash_candidates r11 fix, applied to the sweep)
-    banded = ledger_persist(banded)
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = cache.ledger_persist(banded)
     return (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        band_pairs(banded, bucket)
         .select(
             F.col("a.w").alias(width_col),
             F.col("a.id").alias("id_a"),
@@ -432,31 +380,20 @@ def minhash_candidates(
     Shuffle pattern: explode to n·bands band-keys → hash-join within buckets.
 
     ``bucket_cap`` bounds each (band, bucket) to its lowest-id members before
-    the self-join: a degenerate bucket (identical boilerplate across millions
-    of docs) costs O(cap²) instead of O(n²).  True dup groups larger than the
-    cap still chain through their lowest-id member in other bands/rounds.
+    the self-join (:func:`cap_per_key`): a degenerate bucket (identical
+    boilerplate across millions of docs) costs O(cap²) instead of O(n²).
+    True dup groups larger than the cap still chain through their lowest-id
+    member in other bands/rounds.
 
-    ``sigs`` injects a precomputed (ideally persisted) :func:`minhash_sigs`
-    frame — signatures are band-count-independent, so a band-parameter
-    sweep (the recall frontier) computes them once and re-bands k times
-    instead of re-hashing the corpus per operating point.
+    ``sigs`` injects a precomputed :func:`minhash_sigs` frame — signatures
+    are band-count-independent, so a band-parameter sweep (the recall
+    frontier) computes them once and re-bands k times instead of re-hashing
+    the corpus per operating point.  ``sigs`` is referenced three times
+    below (the banded build and both signature joins): a frame the caller
+    persisted stays under the caller's control, and an unpersisted one is
+    pinned through :func:`engine.cache.ledger_persist` like the internal
+    build, so its subtree evaluates once.
     """
-    rows_per_band = num_hashes // bands
-    caller_owns_sigs = sigs is not None
-    if sigs is None:
-        sigs = minhash_sigs(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            shingle_n=shingle_n,
-            hash_fn=hash_fn,
-        )
-    band_arr = "array(" + ", ".join(
-        f"named_struct('band', {b}, "
-        f"'bkey', {_band_key_sql('sig', b, rows_per_band, hash_fn)})"
-        for b in range(bands)
-    ) + ")"
     # Pair-first shape (r11 opt, guide §2.3 "shuffle keys and metadata
     # instead of payloads" / §8): the banded frame used to carry the k-slot
     # sig array through the cap window's sort + (band, bkey) exchange —
@@ -468,25 +405,28 @@ def minhash_candidates(
     # persisted signatures back per distinct pair (exactly the DuckDB
     # oracle's MATERIALIZED-capped shape).  Interleaved A/B at sf0.1:
     # see OPTIMIZATION_r11.md (dedup_minhash_lsh).
-    # Only INTERNALLY-built sigs are adopted by the ledger (advice r11): a
-    # caller-supplied frame stays under the caller's persistence control —
-    # registering it here would let LRU eviction / ledger_clear() unpersist
-    # it behind the caller's back and silently restore the double-compute
-    # the caller's own persist was preventing.  Callers passing ``sigs=``
-    # should persist it themselves (sigs is referenced three times below).
-    if not caller_owns_sigs:
-        sigs = ledger_persist(sigs)
-    banded = sigs.select(
-        "id",
-        F.explode(F.expr(band_arr)).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    if bucket_cap:
-        wcap = Window.partitionBy("band", "bkey").orderBy("id")
-        banded = (
-            banded.withColumn("__bn", F.row_number().over(wcap))
-            .filter(F.col("__bn") <= bucket_cap)
-            .drop("__bn")
+    # A caller-persisted frame is not adopted by the ledger (advice r11):
+    # registering it would let LRU eviction / ledger_clear() unpersist it
+    # behind the caller's back.
+    if sigs is None:
+        sigs = cache.ledger_persist(
+            minhash_sigs(
+                df,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                shingle_n=shingle_n,
+                hash_fn=hash_fn,
+            )
         )
+    elif not (sigs.storageLevel.useMemory or sigs.storageLevel.useDisk):
+        sigs = cache.ledger_persist(sigs)
+    banded = cap_per_key(
+        band_rows(sigs, _minhash_band_keys(num_hashes, bands, hash_fn), "id"),
+        ["band", "bkey"],
+        "id",
+        bucket_cap,
+    )
     # Persist the CAPPED BANDED frame too (r11): the self-join references
     # this subtree on both sides, and Catalyst/AQE does not reuse the
     # (band, bkey) exchange across the alias pair — unpersisted, the
@@ -495,18 +435,10 @@ def minhash_candidates(
     # already-persisted frame on a repeat invocation over the same corpus.
     # NOTE: if the corpus FILES are rewritten mid-session, that repeat
     # hit is stale — callers that reread mutable inputs must
-    # :func:`ledger_clear` after rewriting (advice r10).
-    banded = ledger_persist(banded)
-
-    a = banded.alias("a")
-    b = banded.alias("b")
+    # :func:`engine.cache.ledger_clear` after rewriting (advice r10).
+    banded = cache.ledger_persist(banded)
     pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        band_pairs(banded, ["band", "bkey"])
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -608,8 +540,9 @@ def hamming_band_pairs(
     Pigeonhole: hamming ≤ 3 guarantees a shared chunk, so recall is exact
     up to 3; above that the banding is approximate (documented per
     caller).  ``bucket_cap`` bounds each (chunk, ckey) bucket to its
-    lowest-id members before the self-join: a pathological chunk value
-    shared by millions of near-identical items costs O(cap²), not O(n²).
+    lowest-id members before the self-join (:func:`cap_per_key`): a
+    pathological chunk value shared by millions of near-identical items
+    costs O(cap²), not O(n²).
     NULL signatures are excluded up front.
     """
     if max_hamming < 0 or max_hamming > 64:
@@ -617,39 +550,20 @@ def hamming_band_pairs(
     base = sigs.filter(F.col(hash_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(hash_col).alias("sh")
     )
-    chunks = base.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("sh"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("ckey"),
-                    )
-                    for c in range(4)
-                ]
+    chunk_keys = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("chunk"),
+                F.shiftright(F.col("sh"), 16 * c).bitwiseAND(F.lit(0xFFFF)).alias("ckey"),
             )
-        ).alias("cc"),
-    ).select("id", "sh", F.col("cc.chunk").alias("chunk"), F.col("cc.ckey").alias("ckey"))
-    if bucket_cap:
-        wcap = Window.partitionBy("chunk", "ckey").orderBy("id")
-        chunks = (
-            chunks.withColumn("__cn", F.row_number().over(wcap))
-            .filter(F.col("__cn") <= bucket_cap)
-            .drop("__cn")
-        )
-    a, b = chunks.alias("a"), chunks.alias("b")
+            for c in range(4)
+        ]
+    )
+    bucket = ["chunk", "ckey"]
+    chunks = cap_per_key(band_rows(base, chunk_keys, "id", "sh"), bucket, "id", bucket_cap)
     hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
     return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ckey") == F.col("b.ckey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        band_pairs(chunks, bucket)
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -821,16 +735,12 @@ def prefix_block_pairs(
     (:func:`ngram_jaccard_pairs`, :func:`ngram_containment_pairs`) feed on.
 
     ``block_cap`` bounds each prefix block to its ``block_cap`` lowest-id
-    members BEFORE the self-join (the MinHash family's bucket_cap
-    contract): a boilerplate opening shared by 10k documents would
-    otherwise make the block quadratic.  Worst case per block is
-    C(block_cap, 2) pairs — the same bound every banded near-dup path in
-    this module accepts.  ``None`` disables (oracle-exactness probes only).
+    members BEFORE the self-join (the :func:`cap_per_key` contract): a
+    boilerplate opening shared by 10k documents would otherwise make the
+    block quadratic.  Worst case per block is C(block_cap, 2) pairs — the
+    same bound every banded near-dup path in this module accepts.  ``None``
+    disables (oracle-exactness probes only).
     """
-    if block_cap is not None and block_cap < 1:
-        # truthiness would silently read 0 as "no cap" — the exact
-        # unbounded quadratic the cap exists to prevent (review catch)
-        raise ValueError(f"block_cap must be >= 1 or None, got {block_cap}")
     toked = tokens(text_col)
     keyed = df.select(
         F.col(id_col).alias("id"),
@@ -839,17 +749,10 @@ def prefix_block_pairs(
             F.array_join(F.slice(toked, 1, n_prefix), " "),
         ).alias("pkey"),
     ).filter(F.col("pkey").isNotNull())
-    if block_cap is not None:
-        wcap = Window.partitionBy("pkey").orderBy("id")
-        keyed = (
-            keyed.withColumn("__bn", F.row_number().over(wcap))
-            .filter(F.col("__bn") <= block_cap)
-            .drop("__bn")
-        )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return a.join(
-        b, (F.col("a.pkey") == F.col("b.pkey")) & (F.col("a.id") < F.col("b.id"))
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    keyed = cap_per_key(keyed, ["pkey"], "id", block_cap)
+    return band_pairs(keyed, ["pkey"]).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    )
 
 
 def ngram_containment_pairs(
@@ -1029,7 +932,7 @@ def embedding_near_dup(
     Exact cosine verifies within buckets.  Returns (id_a, id_b, cos_sim).
 
     ``bucket_cap`` bounds each (band, bkey) bucket to its lowest-id members
-    before the self-join — the same contract as the MinHash path (overflow
+    before the self-join — the :func:`cap_per_key` contract (overflow
     rows emit no pairs).  This is load-bearing at scale: each band has only
     2^(planes/bands) possible keys (16 at the defaults), so an UNCAPPED
     banded self-join over clustered embeddings is quadratic in corpus size
@@ -1069,33 +972,11 @@ def embedding_near_dup(
         if pair_score == "per_collision"
         else []
     )
-    sigs = (
-        df.select(
-            F.col(id_col).alias("id"),
-            *payload,
-            F.explode(sign_band_structs(vec_col, hp, bands)).alias("bb"),
-        )
-        .select(
-            "id",
-            *(["v", "n"] if pair_score == "per_collision" else []),
-            F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"),
-        )
+    sigs = band_rows(
+        df, sign_band_structs(vec_col, hp, bands), F.col(id_col).alias("id"), *payload
     )
-    if bucket_cap:
-        wcap = Window.partitionBy("band", "bkey").orderBy("id")
-        sigs = (
-            sigs.withColumn("__bn", F.row_number().over(wcap))
-            .filter(F.col("__bn") <= bucket_cap)
-            .drop("__bn")
-        )
-    sigs = sigs.persist()
-    a, b = sigs.alias("a"), sigs.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.id") < F.col("b.id")),
-    )
+    sigs = cap_per_key(sigs, ["band", "bkey"], "id", bucket_cap).persist()
+    joined = band_pairs(sigs, ["band", "bkey"])
     if pair_score == "dedup_first":
         cand = joined.select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
@@ -1280,7 +1161,6 @@ def minhash_band_index(
     any surviving member kills the incoming dup); capped per materialization,
     so re-cap on index compaction if buckets grow across many batches.
     """
-    rows_per_band = num_hashes // bands
     sigs = minhash_sigs(
         df,
         id_col=id_col,
@@ -1289,23 +1169,8 @@ def minhash_band_index(
         shingle_n=shingle_n,
         hash_fn=hash_fn,
     )
-    index = sigs.select(
-        "id",
-        "sig",
-        F.explode(F.expr("array(" + ", ".join(
-            f"named_struct('band', {b}, "
-            f"'bkey', {_band_key_sql('sig', b, rows_per_band, hash_fn)})"
-            for b in range(bands)
-        ) + ")")).alias("bb"),
-    ).select("id", "sig", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    if bucket_cap:
-        w = Window.partitionBy("band", "bkey").orderBy("id")
-        index = (
-            index.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= bucket_cap)
-            .drop("__rn")
-        )
-    return index
+    index = band_rows(sigs, _minhash_band_keys(num_hashes, bands, hash_fn), "id", "sig")
+    return cap_per_key(index, ["band", "bkey"], "id", bucket_cap)
 
 
 def minhash_incremental(
@@ -1361,13 +1226,7 @@ def minhash_incremental(
     )
     # within batch: higher id loses to lower id
     within = (
-        new_index.alias("a")
-        .join(
-            new_index.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        band_pairs(new_index, ["band", "bkey"])
         .filter(est(F.col("a.sig"), F.col("b.sig")) >= threshold)
         .select(F.col("b.id").alias("dup_id"))
         .distinct()

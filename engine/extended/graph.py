@@ -76,12 +76,12 @@ def pagerank(
 
     **Static-frame lifetime (advice r11):** independent of ``materialize``,
     the three STATIC frames (edges / nodes / outdeg) are pinned under the
-    module-shared bounded LRU ledger (:func:`engine.extended.dedup.
-    ledger_persist`, cap ``_LEDGER_CAP`` = 6) and are NOT released when
+    module-shared bounded LRU ledger (:func:`engine.cache.ledger_persist`,
+    cap ``_LEDGER_CAP`` = 6) and are NOT released when
     this function returns — the lazy caller's returned frame still
     references them, and a repeat invocation over the same corpus reuses
     them.  They live until LRU eviction or
-    :func:`engine.extended.dedup.ledger_clear`.  A composed query whose
+    :func:`engine.cache.ledger_clear`.  A composed query whose
     simultaneous ledger working set exceeds the cap evicts-and-recomputes
     mid-query (lineage-safe, silently slower); this function pins 3
     entries, so compose with at most one other 3-entry ledger user at a
@@ -93,13 +93,13 @@ def pagerank(
         raise ValueError(f"damping_pct must be in [1, 100], got {damping_pct}")
     if unit < 1:
         raise ValueError(f"unit must be >= 1, got {unit}")
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     # The three STATIC frames are referenced once per round (plus the seed),
     # and the lazy lineage re-expands an unpersisted subtree at every
     # reference — the r11-opt final-plan audit showed 40 parquet scans and
     # zero ReusedExchange for a 3-round run over a joined edge list.  The
-    # bounded ledger (see engine.extended.dedup.ledger_persist) pins them
+    # bounded ledger (see engine.cache.ledger_persist) pins them
     # in BOTH modes: lazy mode now evaluates the edge construction once
     # (5.9 → ~1.3 s at sf0.1), and the session leak stays LRU-bounded
     # instead of requiring the old all-or-nothing materialize choice.
@@ -172,7 +172,7 @@ def _canonical_and_degrees(edges, src_col, dst_col):
     ordered, distinct) and the node degree table — the shared front end
     of triangle_counts and clustering_coefficients (one copy, review
     finding)."""
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     u, v = F.col(src_col), F.col(dst_col)
     # Both frames ride the bounded ledger (r11 opt): triangle_counts
@@ -236,7 +236,7 @@ def triangle_counts(
     # referenced three times (both wedge sides + the closure probe) — pin
     # once under the ledger instead of evaluating the orientation join per
     # reference (r11 opt)
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     de = ledger_persist(de)
     e1, e2 = de.alias("e1"), de.alias("e2")
@@ -336,14 +336,14 @@ def label_propagation(
     must not leave cached frames behind.  Independent of ``materialize``,
     the static symmetrized edge frame is pinned under the module-shared
     bounded LRU ledger and lives until eviction or
-    :func:`engine.extended.dedup.ledger_clear` (see the pagerank
+    :func:`engine.cache.ledger_clear` (see the pagerank
     docstring's static-frame-lifetime note, advice r11).
 
     Returns (node, label).
     """
     from pyspark.sql import Window
 
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     # und is referenced once per round plus the label seed — pinned under
     # the bounded ledger in BOTH modes (r11 opt; the lazy lineage

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from engine.extended.dedup import cap_per_key
+
 __all__ = ["blocked_levenshtein_match", "incremental_entity_ids", "golden_record"]
 
 
@@ -49,10 +51,11 @@ def blocked_levenshtein_match(
     ``(left_id, match_id, dist)`` with NULLs for unmatched rows.
 
     ``block_cap`` bounds hot blocks: only the ``block_cap`` lowest-id
-    right rows per block key enter the candidate join (the ``bucket_cap``
-    discipline from dedup.py — a degenerate key like an all-blank prefix
-    would otherwise make one block quadratic at 100 TB).  Overflow rows
-    are still matchable through their OTHER blocking key.
+    right rows per block key enter the candidate join (the
+    :func:`engine.extended.dedup.cap_per_key` contract — a degenerate key
+    like an all-blank prefix would otherwise make one block quadratic at
+    100 TB).  Overflow rows are still matchable through their OTHER
+    blocking key.
 
     IDs must be non-null and unique per side; left rows with NULL text
     are preserved unmatched (NULL never matches anything — levenshtein
@@ -82,12 +85,7 @@ def blocked_levenshtein_match(
 
     lk = keyed(l_, "__lt", "__bk").filter(F.col("__bk").isNotNull())
     rk = keyed(r_, "__rt", "__bk").filter(F.col("__bk").isNotNull())
-    cap_w = Window.partitionBy("__bk").orderBy("__rid")
-    rk = (
-        rk.withColumn("__rn", F.row_number().over(cap_w))
-        .filter(F.col("__rn") <= block_cap)
-        .drop("__rn")
-    )
+    rk = cap_per_key(rk, ["__bk"], "__rid", block_cap)
     # Length prefilter (r11): |len(l) - len(r)| > max_dist already implies
     # edit distance > max_dist, so the pair can never survive the
     # threshold — dropping it before the candidate-dedup exchange (which
@@ -179,7 +177,7 @@ def incremental_entity_ids(
        table: a caller that rewrites the canonical files between batches
        and re-runs the same logical plan would be served the PRE-rewrite
        matches (wrong entity ids).  Such callers must call
-       :func:`engine.extended.dedup.ledger_clear` after every canonical
+       :func:`engine.cache.ledger_clear` after every canonical
        rewrite — same contract as the dedup family (r10).
     """
     m = blocked_levenshtein_match(
@@ -205,7 +203,7 @@ def incremental_entity_ids(
     # each lazy reference re-expanded the whole blocked-match subtree —
     # block joins, levenshtein, dedup windows (31 parquet scans in the
     # pre-fix plan).  Pin once under the bounded ledger (r11 opt).
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     m = ledger_persist(m)
     matched = m.filter(F.col("__mid").isNotNull()).select(

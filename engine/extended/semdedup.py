@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from engine.extended.dedup import cap_per_key
+
 __all__ = [
     "centroids_by",
     "pairwise_sims",
@@ -68,10 +70,11 @@ _CAP_PROBED = False
 def _apply_cluster_cap(
     df: DataFrame, cluster_col: str, id_col: str, cluster_cap: int
 ) -> DataFrame:
-    """Keep each cluster's ``cluster_cap`` lowest-id rows (row_number over a
-    per-cluster window); warn once per process when the cap is actually
-    truncating (see ``_CAP_PROBED``)."""
+    """Keep each cluster's ``cluster_cap`` lowest-id rows
+    (:func:`engine.extended.dedup.cap_per_key`); warn once per process when
+    the cap is actually truncating (see ``_CAP_PROBED``)."""
     global _CAP_PROBED
+    capped = cap_per_key(df, [cluster_col], id_col, cluster_cap)
     if not _CAP_PROBED:
         n_trunc = (
             df.groupBy(cluster_col)
@@ -95,14 +98,19 @@ def _apply_cluster_cap(
                 " This warning probes once per process.",
                 stacklevel=3,
             )
-    from pyspark.sql import Window
+    return capped
 
-    wcap = Window.partitionBy(cluster_col).orderBy(id_col)
-    return (
-        df.withColumn("__cn", F.row_number().over(wcap))
-        .filter(F.col("__cn") <= cluster_cap)
-        .drop("__cn")
-    )
+
+def _check_probe_cap(probe_parallelism: int | None, cluster_cap: int | None) -> None:
+    """``probe_parallelism`` broadcasts the pair join's build side, which
+    uncapped is the whole corpus: refuse the combination at entry, before
+    any cap is validated or plan built."""
+    if probe_parallelism and not cluster_cap:
+        raise ValueError(
+            f"probe_parallelism={probe_parallelism} needs a cluster_cap: it"
+            " broadcasts the pair join's build side, which with"
+            f" cluster_cap={cluster_cap!r} is the whole corpus"
+        )
 
 
 def centroids_by(
@@ -175,21 +183,16 @@ def pairwise_sims(
     turning the whole job into a single O(size²) bucket): only the
     ``cluster_cap`` lowest-id rows of each cluster enter the pair join, so
     the worst cluster costs O(cap²) dot products and O(size log size) for
-    the row_number pre-pass — the same discipline as ``bucket_cap`` in
-    :func:`engine.extended.dedup.minhash_candidates`.  Overflow rows emit no
+    the row_number pre-pass — the :func:`engine.extended.dedup.cap_per_key`
+    contract (``cluster_cap < 1`` raises).  Overflow rows emit no
     pairs (they are all KEPT by the downstream anti-join); re-cluster with a
     larger k when that matters.  The DEFAULT is 500 (mirroring
     ``bucket_cap``) so an unconfigured caller at corpus scale is bounded
     without doing anything; pass ``None`` explicitly for uncapped, exact
     pair generation.
     """
-    if probe_parallelism and not cluster_cap:
-        raise ValueError(
-            f"probe_parallelism={probe_parallelism} needs a cluster_cap: it"
-            " broadcasts the pair join's build side, which with"
-            f" cluster_cap={cluster_cap!r} is the whole corpus"
-        )
-    if cluster_cap:
+    _check_probe_cap(probe_parallelism, cluster_cap)
+    if cluster_cap is not None:
         df = _apply_cluster_cap(df, cluster_col, id_col, cluster_cap)
     v = df.select(
         F.col(cluster_col).alias("__c"),
@@ -340,7 +343,7 @@ def cross_pairs(
     by ``id_col`` hash after projection so the scoring stage uses every
     core.  Leave None at corpus scale (cluster count ≫ cores).
     """
-    if cluster_cap:
+    if cluster_cap is not None:
         corpus = _apply_cluster_cap(corpus, cluster_col, id_col, cluster_cap)
 
     def side(df: DataFrame, prefix: str) -> DataFrame:
@@ -391,6 +394,7 @@ def semdedup_incremental(
     MinHash path, engine.extended.dedup); (2) :func:`semdedup` the survivors.
     Accepted rows are the caller's corpus-append set.
     """
+    _check_probe_cap(probe_parallelism, cluster_cap)
     dup_vs_corpus = (
         cross_pairs(
             batch,

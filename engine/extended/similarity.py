@@ -866,7 +866,8 @@ def lsh_knn_join(
     shuffle budget is one exchange on the band key + one on the pair, both
     O(collisions), plus the top-k window on q_id (WindowGroupLimit heap).
     ``bucket_cap`` bounds a hot corpus bucket (identical-vector floods) to
-    its cap lowest-id rows, like every other cap in the dedup family.
+    its cap lowest-id rows (:func:`engine.extended.dedup.cap_per_key`,
+    the one cap contract of the dedup family; ``None`` is uncapped).
 
     Same caveat as :func:`knn_join`: the aligned ``exclude_self=True``
     default is correct ONLY when queries share the corpus's id space
@@ -875,27 +876,17 @@ def lsh_knn_join(
     ``exclude_self=False`` there (advice r10; the knn_join test pins the
     broadcast-path caveat).
     """
-    from pyspark.sql import Window
-
-    from engine.extended.dedup import sign_band_structs
+    from engine.extended.dedup import band_rows, cap_per_key, sign_band_structs
 
     hp = _unit_hyperplanes(dim, planes)
 
     def banded_ids(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.explode(sign_band_structs(vec_col, hp, bands)).alias("bb"),
-        ).select(f"{prefix}_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+        return band_rows(
+            df, sign_band_structs(vec_col, hp, bands), F.col(id_col).alias(f"{prefix}_id")
+        )
 
     qb = banded_ids(queries, "q")
-    cb = banded_ids(corpus, "c")
-    if bucket_cap:
-        wcap = Window.partitionBy("band", "bkey").orderBy("c_id")
-        cb = (
-            cb.withColumn("__bn", F.row_number().over(wcap))
-            .filter(F.col("__bn") <= bucket_cap)
-            .drop("__bn")
-        )
+    cb = cap_per_key(banded_ids(corpus, "c"), ["band", "bkey"], "c_id", bucket_cap)
     cand = qb.join(cb, ["band", "bkey"]).select("q_id", "c_id")
     if exclude_self:
         cand = cand.filter(F.col("q_id") != F.col("c_id"))

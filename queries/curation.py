@@ -3242,7 +3242,7 @@ def dedup_containment(spark, sf_dir):
     subset-duplication / quote detector symmetric Jaccard misses (a short
     doc embedded whole in a long one has tiny Jaccard but containment ≈ 1
     on the short side).  Blocks cap at their 500 lowest-id members (the
-    MinHash bucket_cap contract; engine.extended.dedup.prefix_block_pairs);
+    engine.extended.dedup.cap_per_key contract; prefix_block_pairs);
     verification joins shingle arrays onto the bounded candidate set, and
     at corpus scale the blocker is the banded MinHash candidate join."""
     from engine.extended.dedup import (

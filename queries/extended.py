@@ -154,7 +154,7 @@ def _minhash_with_sql(
     branches = []
     for b in range(bands):
         # bkey is the RAW band slice (list equality == band equality; no
-        # hash needed) — mirrors _band_col's md5-mode slice key exactly
+        # hash needed) — mirrors _band_key_sql's md5-mode slice key exactly
         key = f"list_slice(sig, {b * rpb + 1}, {b * rpb + rpb})"
         branches.append(f"SELECT doc_id, sig, {b} AS band, {key} AS bkey FROM sigs")
     banded = "\n      UNION ALL\n      ".join(branches)
@@ -344,8 +344,9 @@ def dedup_simhash(spark, sf_dir):
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact word-3-gram Jaccard over candidate pairs blocked on a shared
     5-token prefix, blocks capped at their 500 lowest-id members (the
-    MinHash bucket_cap contract — a boilerplate opening shared by 10k docs
-    must not go quadratic; engine.extended.dedup.prefix_block_pairs)."""
+    engine.extended.dedup.cap_per_key contract — a boilerplate opening
+    shared by 10k docs must not go quadratic;
+    engine.extended.dedup.prefix_block_pairs)."""
     from engine.extended.dedup import ngram_jaccard_pairs, prefix_block_pairs
 
     d = t(spark, sf_dir, "documents")
@@ -1295,7 +1296,7 @@ def _true_jaccard_pairs(sub):
     so it rides the bounded ledger; tokens are projected once behind an
     alias before shingling (the inline word_ngrams form re-tokenizes per
     shingle — the documented 12× trap) (r11 opt)."""
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
     from engine.extended.text import ngrams_from, tokens
 
     sh = ledger_persist(
@@ -1395,7 +1396,7 @@ def lsh_recall_frame(spark, sf_dir, *, max_doc=300, bands=16):
     )
     # cand is referenced twice (recall join + candidate count): pin the
     # few-KB pair list instead of re-running the banded self-join (r11 opt)
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     cand = ledger_persist(
         minhash_candidates(sub, hash_fn="md5", bands=bands).select(
@@ -1480,11 +1481,8 @@ def minhash_recall_frontier(spark, sf_dir):
     r8; review catch r9 — the leak fix had dropped the persist and was
     recomputing the signatures twice).  The exact side is
     :func:`_true_jaccard_pairs` (postings equi-join, r9)."""
-    from engine.extended.dedup import (
-        ledger_persist,
-        minhash_band_sweep,
-        minhash_sigs,
-    )
+    from engine.cache import ledger_persist
+    from engine.extended.dedup import minhash_band_sweep, minhash_sigs
 
     widths = (8, 16, 32)
     d = t(spark, sf_dir, "documents")

@@ -1057,7 +1057,7 @@ def hist_shard_merge(spark, sf_dir):
     # merged is referenced twice (cell-diff audit + quantile read) and its
     # lazy lineage re-ran both shard builds per reference (6 lineitem scans
     # in the pre-fix plan) — pin the ≤256-row histogram once (r11 opt)
-    from engine.extended.dedup import ledger_persist
+    from engine.cache import ledger_persist
 
     merged = ledger_persist(hist_merge(even, odd))
     # whole is referenced twice (cell-diff audit + the exact-median

@@ -721,11 +721,8 @@ def test_ledger_persist_keyed_no_interleaved_eviction(spark):
     for a repeated identical plan (multi-pass bench → one signature build
     per session) and (b) not evict an un-collected frame when a second,
     different dedup pipeline is built before the first is collected."""
-    from engine.extended.dedup import (
-        _INTERNAL_SIGS_LAST,
-        ledger_persist,
-        minhash_sigs,
-    )
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_persist
+    from engine.extended.dedup import minhash_sigs
 
     _INTERNAL_SIGS_LAST.clear()
     docs = _docs(spark)
@@ -743,7 +740,7 @@ def test_ledger_persist_keyed_no_interleaved_eviction(spark):
     assert s1.count() == 4 and s2.count() == 3  # doc 4 ("short"): no shingles
     # filling the ledger to its cap with distinct plans LRU-evicts the
     # stalest (s1) while the freshest entries stay pinned
-    from engine.extended.dedup import _LEDGER_CAP
+    from engine.cache import _LEDGER_CAP
 
     fresh = [
         ledger_persist(minhash_sigs(docs.filter(F.col("doc_id") >= i)))
@@ -761,12 +758,8 @@ def test_ledger_clear_invalidates_and_unpersists(spark):
     the ledger, so a caller that rewrote its corpus files gets a REBUILT
     frame (new object, fresh materialization) on the next ledger_persist of
     the same logical plan instead of the stale cached one."""
-    from engine.extended.dedup import (
-        _INTERNAL_SIGS_LAST,
-        ledger_clear,
-        ledger_persist,
-        minhash_sigs,
-    )
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_clear, ledger_persist
+    from engine.extended.dedup import minhash_sigs
 
     _INTERNAL_SIGS_LAST.clear()
     docs = _docs(spark)

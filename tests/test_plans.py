@@ -827,11 +827,8 @@ def test_r11_opt_minhash_pair_first_banded_without_sigs(spark):
     (band, bkey) exchange).  est_jaccard is computed once per DISTINCT
     pair by joining the persisted sigs back — the payload crosses one
     id-keyed exchange per side instead of riding every band row."""
-    from engine.extended.dedup import (
-        _INTERNAL_SIGS_LAST,
-        ledger_clear,
-        minhash_candidates,
-    )
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_clear
+    from engine.extended.dedup import minhash_candidates
     ledger_clear()
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = minhash_candidates(docs, num_hashes=64, bands=16, hash_fn="md5")
@@ -882,7 +879,7 @@ def test_r11_opt_graph_statics_ride_the_ledger(spark):
     scans, zero ReusedExchange in the pre-fix final plan)."""
     from pyspark.sql import functions as F
 
-    from engine.extended.dedup import _INTERNAL_SIGS_LAST, ledger_clear
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_clear
     from engine.extended.graph import label_propagation, pagerank, triangle_counts
 
     edges = spark.createDataFrame(

@@ -3,8 +3,10 @@ fusion, leakage-safe group split."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from engine.extended import dedup, linkage, semdedup, similarity
 from engine.extended.sampling import group_safe_split, hash_split
 from engine.extended.search import rrf_fuse_topk
 from engine.extended.text import c4_rule_exprs
@@ -273,11 +275,59 @@ def test_prefix_block_cap_bounds_hot_blocks(spark):
         spark.createDataFrame(rows[:3] + rows[-1:], "doc_id long, text string")
     )
     assert tiny.count() == 3
-    # 0 must not silently mean "no cap" (truthiness trap)
-    import pytest
 
+
+def _cap_docs(spark):
+    return spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "alpha beta gamma delta epsilon eta")],
+        "doc_id long, text string",
+    )
+
+
+def _cap_vecs(spark):
+    return spark.createDataFrame(
+        [(1, 0, [1.0] * 16), (2, 0, [1.0] * 15 + [0.9])],
+        "vec_id long, label int, embedding array<float>",
+    )
+
+
+def _cap_names(spark):
+    left = spark.createDataFrame([(1, "smith")], "left_id long, left_text string")
+    right = spark.createDataFrame([(7, "smyth")], "right_id long, right_text string")
+    return left, right
+
+
+#: every capped candidate generator, called with its cap set to ``cap``
+_CAPPED = {
+    "minhash_candidates": lambda s, cap: dedup.minhash_candidates(_cap_docs(s), bucket_cap=cap),
+    "minhash_band_sweep": lambda s, cap: dedup.minhash_band_sweep(
+        dedup.minhash_sigs(_cap_docs(s)), bucket_cap=cap
+    ),
+    "minhash_band_index": lambda s, cap: dedup.minhash_band_index(_cap_docs(s), bucket_cap=cap),
+    "hamming_band_pairs": lambda s, cap: dedup.hamming_band_pairs(
+        dedup.simhash_sigs(_cap_docs(s)), bucket_cap=cap
+    ),
+    "simhash_candidates": lambda s, cap: dedup.simhash_candidates(_cap_docs(s), bucket_cap=cap),
+    "embedding_near_dup": lambda s, cap: dedup.embedding_near_dup(_cap_vecs(s), bucket_cap=cap),
+    "lsh_knn_join": lambda s, cap: similarity.lsh_knn_join(
+        _cap_vecs(s), _cap_vecs(s), k=1, bucket_cap=cap
+    ),
+    "semdedup": lambda s, cap: semdedup.semdedup(_cap_vecs(s), threshold=0.9, cluster_cap=cap),
+    "prefix_block_pairs": lambda s, cap: dedup.prefix_block_pairs(_cap_docs(s), block_cap=cap),
+    "blocked_levenshtein_match": lambda s, cap: linkage.blocked_levenshtein_match(
+        *_cap_names(s), block_cap=cap
+    ),
+}
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+@pytest.mark.parametrize("name", sorted(_CAPPED))
+def test_bucket_cap_below_one_raises(spark, name, cap):
+    """A cap below 1 must raise in every capped generator, not silently
+    read as "no cap" (the truthiness trap: 0 would build the unbounded
+    quadratic self-join the cap exists to prevent)."""
     with pytest.raises(ValueError):
-        prefix_block_pairs(df, block_cap=0)
+        _CAPPED[name](spark, cap)
 
 
 def test_weighted_jaccard_sees_repetition(spark):

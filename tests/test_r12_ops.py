@@ -1,5 +1,6 @@
 """Round-12 optimization gates: ledger staleness guard, minhash caller-owned
-sigs contract, bounded BPE replay, semdedup forced broadcast."""
+and unpersisted sigs contract, bounded BPE replay, semdedup forced
+broadcast."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ def test_r12_ledger_rewrite_without_clear_is_detected(spark, tmp_path):
     and re-runs the same logical plan must NOT be served the pre-rewrite
     materialization — the input-files snapshot guard (or plan mismatch)
     must rebuild from the new data even without ledger_clear()."""
-    from engine.extended.dedup import _INTERNAL_SIGS_LAST, ledger_persist
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_persist
 
     _INTERNAL_SIGS_LAST.clear()
     p = str(tmp_path / "corpus.parquet")
@@ -34,11 +35,8 @@ def test_r12_ledger_rewrite_without_clear_is_detected(spark, tmp_path):
 def test_r12_ledger_hit_still_shared_after_guard(spark):
     """The inputFiles guard must not break the hit path: two identical
     in-session plans over the SAME files still share one cached frame."""
-    from engine.extended.dedup import (
-        _INTERNAL_SIGS_LAST,
-        ledger_persist,
-        minhash_sigs,
-    )
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_persist
+    from engine.extended.dedup import minhash_sigs
 
     _INTERNAL_SIGS_LAST.clear()
     docs = spark.createDataFrame(
@@ -58,12 +56,8 @@ def test_r12_minhash_caller_owned_sigs_not_adopted(spark):
     caller's persistence control — minhash_candidates must not register it
     in the shared ledger (where eviction/ledger_clear could unpersist it
     behind the caller's back), and results must match the internal build."""
-    from engine.extended.dedup import (
-        _INTERNAL_SIGS_LAST,
-        ledger_clear,
-        minhash_candidates,
-        minhash_sigs,
-    )
+    from engine.cache import _INTERNAL_SIGS_LAST, ledger_clear
+    from engine.extended.dedup import minhash_candidates, minhash_sigs
 
     ledger_clear()
     docs = spark.createDataFrame(
@@ -89,6 +83,37 @@ def test_r12_minhash_caller_owned_sigs_not_adopted(spark):
     )
     assert got == want
     sigs.unpersist()
+    ledger_clear()
+
+
+def test_r12_minhash_unpersisted_sigs_evaluate_once(spark):
+    """minhash_candidates references ``sigs`` three times (the banded build
+    and both signature joins): an UNPERSISTED caller-supplied frame goes
+    through the ledger, so its subtree evaluates once per row, not once
+    per reference.  The frame counts its own evaluations in a Python UDF."""
+    from engine.cache import ledger_clear
+    from engine.extended.dedup import minhash_candidates, minhash_sigs
+
+    ledger_clear()
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog tonight"),
+            (2, "the quick brown fox jumps over the lazy dog today"),
+            (3, "completely different text about spark optimization work"),
+        ],
+        "doc_id long, text string",
+    )
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        evaluated.add(1)
+        return x
+
+    sigs = minhash_sigs(docs)
+    counted = sigs.select(F.udf(tick, "long")("id").alias("id"), "sig")
+    got = minhash_candidates(docs, sigs=counted).select("id_a", "id_b").collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
+    assert evaluated.value == 3  # one evaluation per signature row
     ledger_clear()
 
 
