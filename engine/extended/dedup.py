@@ -588,7 +588,9 @@ def simhash_candidates(
     distance within buckets.  Returns (id_a, id_b, hamming) — the text
     instantiation of :func:`hamming_band_pairs`.
     """
-    sigs = simhash_sigs(df, id_col=id_col, text_col=text_col, hash_fn=hash_fn).persist()
+    sigs = cache.ledger_persist(
+        simhash_sigs(df, id_col=id_col, text_col=text_col, hash_fn=hash_fn)
+    )
     return hamming_band_pairs(
         sigs, max_hamming=max_hamming, bucket_cap=bucket_cap
     )
@@ -975,7 +977,9 @@ def embedding_near_dup(
     sigs = band_rows(
         df, sign_band_structs(vec_col, hp, bands), F.col(id_col).alias("id"), *payload
     )
-    sigs = cap_per_key(sigs, ["band", "bkey"], "id", bucket_cap).persist()
+    sigs = cache.ledger_persist(
+        cap_per_key(sigs, ["band", "bkey"], "id", bucket_cap)
+    )
     joined = band_pairs(sigs, ["band", "bkey"])
     if pair_score == "dedup_first":
         cand = joined.select(
@@ -1198,15 +1202,17 @@ def minhash_incremental(
     Shuffle shape: the batch's band table joins the (bucketed) corpus index
     on (band, bkey) — batch-sized probe, corpus never rescanned.
     """
-    new_index = minhash_band_index(
-        new_docs,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        hash_fn=hash_fn,
-    ).persist()
+    new_index = cache.ledger_persist(
+        minhash_band_index(
+            new_docs,
+            id_col=id_col,
+            text_col=text_col,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_n=shingle_n,
+            hash_fn=hash_fn,
+        )
+    )
 
     def est(a, b):
         return F.size(

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -33,7 +32,6 @@ __all__ = [
     "scrub_quotes",
     "full_address",
     "zip5",
-    "ascii_scrub_expr",
     "parse_address_udf",
     "reformat_malformed_address",
     "RepeatedLabelError",
@@ -70,28 +68,6 @@ def full_address(*cols: str, strict_parity: bool = False) -> Column:
 def zip5(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.substring(c, 1, 5)
-
-
-# -- F10: per-field charset whitelists (helpers/address_helper.py:52-68) -----
-_FIELD_WHITELIST = {
-    # keep letters/space/hyphen for city & region
-    "city": "[^A-Za-z \\-]",
-    "region": "[^A-Za-z \\-]",
-    # street line also keeps digits and light punctuation
-    "street": "[^A-Za-z0-9 \\-.#/&]",
-    # zip keeps digits and hyphen
-    "zip": "[^0-9\\-]",
-}
-
-
-def ascii_scrub_expr(col: Column | str, field: str) -> Column:
-    """Whitelist scrub for one address field (applied after transliteration).
-
-    The unicode→ascii step itself is in the parse UDF (no Spark built-in
-    transliterates); this expression is the JVM-side second half.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, _FIELD_WHITELIST[field], "")
 
 
 # ---------------------------------------------------------------------------

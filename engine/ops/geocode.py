@@ -43,21 +43,12 @@ from pyspark.sql.types import StringType, StructField, StructType
 from engine.ops.address import _QUOTE_RE, _parse_one, scrub_quotes
 
 __all__ = [
-    "assemble_geoid",
-    "borough_fips",
-    "tract_coalesce",
     "cascade_batch",
     "with_geoid",
     "geocode_cascade",
     "fake_census_transport",
     "fake_geosupport",
 ]
-
-# -- F7: geoid assembly (census_geocoder_api_client.py:42-43) ----------------
-def assemble_geoid(state: Column, county: Column, tract: Column) -> Column:
-    """11-char geoid = state(2) + county(3) + tract(6)."""
-    return F.concat(state, county, tract)
-
 
 # -- F8: borough→FIPS literal map (nyc_geocoder_client.py:8-14) --------------
 BOROUGH_FIPS = {
@@ -67,20 +58,6 @@ BOROUGH_FIPS = {
     "QUEENS": "36081",
     "STATEN ISLAND": "36085",
 }
-
-
-def borough_fips(borough: Column | str) -> Column:
-    c = F.col(borough) if isinstance(borough, str) else borough
-    mapping = F.create_map(
-        *[F.lit(x) for kv in BOROUGH_FIPS.items() for x in kv]
-    )
-    return mapping[F.upper(c)]
-
-
-def tract_coalesce(*tract_cols: Column) -> Column:
-    """first non-null census-tract vintage (2020/2010/2000/1990,
-    nyc_geocoder_client.py:59-67)."""
-    return F.coalesce(*tract_cols)
 
 
 # ---------------------------------------------------------------------------

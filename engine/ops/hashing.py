@@ -22,7 +22,7 @@ README.md:57).  Two engine modes:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -99,10 +99,3 @@ def normalize_id(col: Column | str) -> Column:
     (lib/pipeline_controller.py:147-148)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("long").cast("string")
-
-
-def obfuscate_frame(
-    df: DataFrame, cols: list[str], salt: str, *, mode: str = "sha2"
-) -> DataFrame:
-    """Apply :func:`obfuscate_col` to several columns in one projection."""
-    return df.withColumns({c: obfuscate_col(c, salt, mode=mode) for c in cols})

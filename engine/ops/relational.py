@@ -19,13 +19,12 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "ordered_pairs",
     "normalize_code_col",
-    "trim_cols",
     "range_scan",
     "in_list_filter",
     "left_join_broadcast",
@@ -36,7 +35,6 @@ __all__ = [
     "keyset_page",
     "min_max",
     "success_rate",
-    "watermark_max",
     "missing_key_audit",
 ]
 
@@ -51,11 +49,6 @@ def normalize_code_col(col: Column | str, *, none_token: str = "none") -> Column
     c = F.col(col) if isinstance(col, str) else col
     t = F.trim(c)
     return F.when((F.length(t) == 0) | (t == none_token), F.lit(None)).otherwise(t)
-
-
-# -- P3: TRIM projection (helpers/query_helper.py:11) ------------------------
-def trim_cols(df: DataFrame, *cols: str) -> DataFrame:
-    return df.withColumns({c: F.trim(F.col(c)) for c in cols})
 
 
 # -- P5 + S1/S2: half-open range scan with non-null guard --------------------
@@ -187,14 +180,6 @@ def min_max(df: DataFrame, col: str) -> tuple:
     watermark cannot advance, lib/pipeline_controller.py:150-162)."""
     row = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).collect()[0]
     return row["mn"], row["mx"]
-
-
-# -- A3/ST2: watermark advance ----------------------------------------------
-def watermark_max(df: DataFrame, col: str):
-    """Next incremental start = max(ordering col) of the batch.  The reference
-    takes the last row of a sorted frame (lib/pipeline_controller.py:246);
-    ``max()`` is the order-free equivalent and needs no global sort."""
-    return df.agg(F.max(col).alias("mx")).collect()[0]["mx"]
 
 
 # -- A5: geocode success rate -------------------------------------------------

@@ -18,7 +18,7 @@ Graph ↔ reference mapping (citations into /root/reference):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,8 +91,9 @@ def _ensure_sierra_columns(batch: DataFrame) -> DataFrame:
 
 def _prep_batch(batch: DataFrame, seen: DataFrame | None, cfg: PipelineConfig) -> DataFrame:
     """Shared head of all modes: schema tolerance → id normalize (F12) →
-    session anti-join (J3) → keep-first dedup (J4, when tiebreak cols
-    present)."""
+    session anti-join (J3) → keep-first dedup (J4: by the address tiebreak
+    cols when present, else by creation time, which
+    :func:`_ensure_sierra_columns` always supplies)."""
     batch = _ensure_sierra_columns(batch)
     out = batch.withColumn("patron_id_plaintext", normalize_id("patron_id_plaintext"))
     if seen is not None:
@@ -102,8 +103,9 @@ def _prep_batch(batch: DataFrame, seen: DataFrame | None, cfg: PipelineConfig) -
             *DEDUP_ORDER_COLS
         )
     else:
-        out = keep_first(out, ["patron_id_plaintext"], [MODE_ORDER_COL[PipelineMode.NEW_PATRONS]]) \
-            if "creation_timestamp" in out.columns else out.dropDuplicates(["patron_id_plaintext"])
+        out = keep_first(
+            out, ["patron_id_plaintext"], [MODE_ORDER_COL[PipelineMode.NEW_PATRONS]]
+        )
     return out
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from engine.ops.address import parse_address_udf
 from engine.schemas import register_views
 
 __all__ = ["register_engine_sql"]
@@ -35,14 +36,7 @@ def register_engine_sql(spark: SparkSession, sf_dir: str | None = None) -> None:
     if sf_dir:
         register_views(spark, sf_dir)
 
-    from engine.ops.address import PARSED_SCHEMA, _parse_one
-
-    @pandas_udf(PARSED_SCHEMA)
-    def engine_parse_address(addr: pd.Series) -> pd.DataFrame:
-        rows = [_parse_one(a) for a in addr]
-        return pd.DataFrame(rows, columns=["house_number", "street_name", "unit"])
-
-    spark.udf.register("engine_parse_address", engine_parse_address)
+    spark.udf.register("engine_parse_address", parse_address_udf())
 
     @pandas_udf(StringType())
     def engine_obfuscate(value: pd.Series, salt: pd.Series) -> pd.Series:

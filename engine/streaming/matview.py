@@ -19,9 +19,10 @@ either the previous complete version or the new complete version, never a
 half-written directory — the lightweight cousin of
 :func:`engine.ops.publish.publish_dataset` for state that turns over
 every batch.  The previous version is retained for readers in flight;
-older ones are pruned.  At-least-once re-delivery is guarded by the
-seen-batch_id set in process (the accumulator owns its idempotence, as in
-streaming_cms) and by the version naming across the checkpoint's replay.
+older ones are pruned.  The per-batch fold runs under the engine's one
+``availableNow`` drain (:func:`engine.streaming.incremental._drain`), whose
+batch-id guard skips an in-process re-delivery; across the checkpoint's
+replay the version naming makes a re-run batch repair the pointer instead.
 
 Exchange budget (VERDICT r8 #2): with ``non_nullable_keys=True`` the
 maintainer stores each snapshot version as a BUCKETED catalog table on
@@ -52,6 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from engine.ops.matview import agg_partials, merge_agg_snapshot
+from engine.streaming.incremental import _drain
 
 __all__ = ["streaming_agg_maintenance", "read_agg_snapshot"]
 
@@ -236,7 +238,6 @@ def streaming_agg_maintenance(
     sum_cols = tuple((sums or {}).keys())
     min_cols = tuple((mins or {}).keys())
     max_cols = tuple((maxs or {}).keys())
-    seen: set[int] = set()
     ptr0 = _read_pointer(snapshot_dir)
     if ptr0 is not None and ptr0.startswith("table:") != non_nullable_keys:
         # switching storage modes on a live snapshot_dir would strand the
@@ -293,9 +294,7 @@ def streaming_agg_maintenance(
         )
         return names
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in seen:
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         from engine.ops.io import write_bucketed
 
         if non_nullable_keys:
@@ -307,7 +306,6 @@ def streaming_agg_maintenance(
                 # table is whole — repair the pointer.  Works in a fresh
                 # session too: the sidecar re-registers the external table.
                 _swap_pointer(snapshot_dir, "table:" + version_table)
-                seen.add(batch_id)
                 return
         else:
             version = f"v{batch_id:012d}"
@@ -317,7 +315,6 @@ def streaming_agg_maintenance(
                     # crash between write and swap: the version is COMPLETE
                     # on disk — just repair the pointer
                     _swap_pointer(snapshot_dir, version)
-                    seen.add(batch_id)
                     return
                 # crash MID-write left a partial vdir (no _SUCCESS):
                 # swapping the pointer to it would merge every later batch
@@ -416,14 +413,5 @@ def streaming_agg_maintenance(
             _swap_pointer(snapshot_dir, version)
             keep = {version} | ({prev_version} if prev_version else set())
             _prune_old_versions(snapshot_dir, keep)
-        seen.add(batch_id)
 
-    query = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query, snapshot_dir
+    return _drain(stream_df, fold, checkpoint_dir, query_name), snapshot_dir

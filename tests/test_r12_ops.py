@@ -117,6 +117,47 @@ def test_r12_minhash_unpersisted_sigs_evaluate_once(spark):
     ledger_clear()
 
 
+def test_ledger_clear_releases_simhash_embedding_and_incremental_frames(spark):
+    """simhash_candidates, embedding_near_dup and minhash_incremental pin
+    their banded/signature frames through the ledger, so ledger_clear()
+    leaves no persisted RDD of theirs behind (each used to pin one more
+    frame per call with a new plan, for the rest of the session)."""
+    from engine.cache import ledger_clear
+    from engine.extended.dedup import (
+        embedding_near_dup,
+        minhash_band_index,
+        minhash_incremental,
+        simhash_candidates,
+    )
+
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark.catalog.clearCache()
+    ledger_clear()
+    before = persistent_rdds()
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [(1, text), (2, text), (3, "completely different words here")],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [1.0, float(i), 2.0, 0.5]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    batch = spark.createDataFrame(
+        [(10, text + " again"), (11, "novel content about incremental indexes")],
+        "doc_id long, text string",
+    )
+    assert simhash_candidates(docs, max_hamming=10).count() >= 1
+    assert embedding_near_dup(vecs, dim=4, planes=8, threshold=0.9).count() >= 1
+    kept, updated = minhash_incremental(batch, minhash_band_index(docs), threshold=0.5)
+    assert kept.count() >= 1 and updated.count() > 0
+    assert persistent_rdds() - before, "the three calls persisted nothing"
+    ledger_clear()
+    assert persistent_rdds() - before == set()
+
+
 def test_r12_bpe_replay_checkpoint_bounds_chain(spark, monkeypatch):
     """advice r11: with the checkpoint interval forced to 2, a 5-rule train
     must produce the same rules as the unbounded replay (the benched
@@ -159,19 +200,38 @@ def test_r12_semdedup_probe_spread_forces_broadcast(spark):
     assert out.count() == 2 * (4 * 3 // 2)  # 2 clusters x C(4,2) pairs
 
 
-def test_r12_q5_single_probe_on_lineitem(spark, sf_dir=None):
+def _plan_children(node):
+    """Children of a JVM physical-plan node, seeing through the AQE wrapper
+    and query stages to the plans they hold."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _joins_above_scans(node, table, joins=0):
+    """For every leaf scan of ``table`` under ``node``: the number of join
+    operators on its path up to ``node``."""
+    kids = _plan_children(node)
+    if not kids:
+        return [joins] if f"{table}.parquet" in node.toString() else []
+    name = node.getClass().getSimpleName()
+    joins += "Join" in name or name == "CartesianProductExec"
+    return [n for k in kids for n in _joins_above_scans(k, table, joins)]
+
+
+def test_r12_q5_single_probe_on_lineitem(spark):
     """r12 opt gate: q5's fact table must feed exactly ONE join — the
     collapsed (s_suppkey -> n_name) broadcast dim; the two dim joins live
     inside the broadcast subtree, not on the lineitem path."""
     from queries import SPARK_QUERIES
 
     df = SPARK_QUERIES["q5_nation_revenue"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the lineitem scan's join chain: in the collapsed shape the plan text
-    # between the TOP join and the lineitem scan contains no other join
-    top = plan.index("BroadcastHashJoin")
-    li = plan.index("lineitem.parquet")
-    assert plan.count("BroadcastHashJoin", top, li) == 1, plan[:2000]
+    plan = df._jdf.queryExecution().executedPlan()
+    assert _joins_above_scans(plan, "lineitem") == [1], plan.toString()[:2000]
 
 
 def test_r12_edge_build_no_collect_list(spark):

@@ -117,6 +117,66 @@ def test_run_available_now_foreachbatch(spark, tmp_path):
     assert sum(n for _, n in seen) == 0
 
 
+class _StandInStream:
+    """Takes the place of a streaming DataFrame: ``writeStream`` chains
+    back to itself, ``foreachBatch`` keeps the per-batch function, and
+    ``start`` returns a query that has already terminated."""
+
+    def __init__(self):
+        self.writeStream = self
+        self.process = None
+        self.trigger_kwargs = None
+
+    def foreachBatch(self, fn):
+        self.process = fn
+        return self
+
+    def option(self, key, value):
+        return self
+
+    def queryName(self, name):
+        return self
+
+    def trigger(self, **kwargs):
+        self.trigger_kwargs = kwargs
+        return self
+
+    def start(self):
+        return self
+
+    def awaitTermination(self):
+        return None
+
+
+def test_run_available_now_folds_a_redelivered_batch_once():
+    """foreachBatch is at-least-once: a batch id delivered again in the
+    same process reaches the sink once, and a batch whose sink raised is
+    folded again on re-delivery."""
+    stream = _StandInStream()
+    calls: list[tuple[str, int]] = []
+    fail_once = {2}
+
+    def sink(df, batch_id):
+        if batch_id in fail_once:
+            fail_once.discard(batch_id)
+            raise RuntimeError("transient sink failure")
+        calls.append((df, batch_id))
+
+    query = run_available_now(stream, lambda df: df + "'", sink, "unused-checkpoint")
+    assert query is stream
+    assert stream.trigger_kwargs == {"availableNow": True}
+    stream.process("b0", 0)
+    stream.process("b0", 0)
+    stream.process("b1", 1)
+    try:
+        stream.process("b2", 2)
+    except RuntimeError:
+        pass
+    stream.process("b2", 2)
+    stream.process("b2", 2)
+    assert calls == [("b0'", 0), ("b1'", 1), ("b2'", 2)]
+
+
 def test_stream_stream_join_with_watermarks(spark, tmp_path):
     """Stream-stream inner join (clicks ⋈ views per user within 30 min) —
     both sides watermarked so join state is bounded; result must equal the

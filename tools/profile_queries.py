@@ -2,7 +2,8 @@
 
 For each named query: time the DataFrame BUILD (python/py4j expression
 construction) separately from EXECUTION (noop-sink force), over N passes,
-and optionally dump .explain("formatted") to a file.
+and optionally dump the final physical plan of one more run to a file
+(:func:`tools.final_plan.final_plan`).
 
 Usage:
     python tools/profile_queries.py [--sf DIR] [--passes N] [--plans OUTDIR] q1 q2 ...
@@ -25,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from engine.session import get_spark  # noqa: E402
+from tools.final_plan import final_plan  # noqa: E402
 
 
 def median(xs):
@@ -37,7 +39,7 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="dump explain('formatted') per query to DIR/<name>.txt")
+    ap.add_argument("--plans", default=None, help="dump the final plan per query to DIR/<name>.txt")
     ap.add_argument("--headline", action="store_true")
     ap.add_argument("--warm-dir", default="/root/testdata/sf0.001")
     args = ap.parse_args()
@@ -76,10 +78,7 @@ def main() -> None:
             spark.catalog.clearCache()
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            df = fn(spark, args.sf)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
+            plan = final_plan(fn(spark, args.sf))
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
                 f.write(plan)
             spark.catalog.clearCache()
